@@ -66,15 +66,6 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """True if ``path`` exists on its filesystem.  Used to distinguish
-    'sink not created yet' from real analysis errors: catching
-    AnalysisException for that is too broad (schema drift or a corrupt
-    footer would silently masquerade as first-batch)."""
-    fs, jpath = hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
 def has_committed_files(spark: SparkSession, path: str) -> bool:
     """True if ``path`` contains at least one COMMITTED data file — a
     file none of whose path segments under ``path`` starts with ``.``
@@ -148,12 +139,6 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Scan several tables at once; defaults to every table."""
-    use = names or TABLES
-    return {n: scan(spark, sf_dir, n) for n in use}
 
 
 def scan_csv(

@@ -334,7 +334,14 @@ def near_dup_minhash(
     exchanges in the final plan) and shuffled |A| token rows per
     candidate pair.  ``n_inter``/``n_a``/``n_b`` are the same exact
     integers (set intersection / set sizes), so jaccard — one double
-    division — and every output row are bit-identical."""
+    division — and every output row are bit-identical.
+
+    ``threshold`` must lie in (0, 1].  At or below 0 the verify would
+    keep every candidate pair, including pairs sharing no token
+    (``n_inter = 0``), so a non-positive threshold is refused when the
+    plan is built rather than filtered per pair."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     cands = minhash_lsh_candidates(
         df, id_col, text_col, num_hashes, bands, shingle_n, seed
     )

@@ -36,11 +36,6 @@ def hash_bucket(id_col: Column | str, n_buckets: int = 100, salt: int = 0) -> Co
     return ((c * F.lit(_KNUTH) + F.lit(salt)) % F.lit(_M32)) % F.lit(n_buckets)
 
 
-def hash_bucket_sql(id_expr: str, n_buckets: int = 100, salt: int = 0) -> str:
-    """The identical bucket expression in ANSI SQL (oracle side)."""
-    return f"((({id_expr}) * {_KNUTH} + {salt}) % {_M32}) % {n_buckets}"
-
-
 def deterministic_split(
     df: DataFrame,
     id_col: str,
@@ -133,14 +128,6 @@ def pii_count(col: Column | str) -> Column:
     )
 
 
-def redact_sql(text_expr: str, token: str = "[REDACTED]") -> str:
-    """Oracle-side redaction: same two passes, same patterns."""
-    return (
-        f"regexp_replace(regexp_replace({text_expr}, '{_EMAIL_RE}', '{token}', 'g'),"
-        f" '{_PHONE_RE}', '{token}', 'g')"
-    )
-
-
 def contamination_check(
     train: DataFrame,
     benchmark: DataFrame,
@@ -200,8 +187,3 @@ def epoch_shuffle(
     """
     key = hash_bucket(id_col, _M32, salt=(seed * 1_000_003 + epoch))
     return df.withColumn(key_col, key.cast("long"))
-
-
-def epoch_shuffle_sql(id_expr: str, epoch: int, seed: int = 0) -> str:
-    """Oracle-side twin of ``epoch_shuffle``'s key expression."""
-    return hash_bucket_sql(id_expr, _M32, salt=(seed * 1_000_003 + epoch))

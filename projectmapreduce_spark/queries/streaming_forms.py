@@ -3,7 +3,9 @@
 
 Each query drains the finite events fixture through a REAL streaming
 plan (readStream → stateful op → memory sink, availableNow trigger)
-and returns the sink contents.  Complete/update-mode drains over a
+and returns the sink contents.  Every drain goes through the one
+harness, ``streaming.core.run_available_now``, which sizes the state
+partitions from the query's input files.  Complete/update-mode drains over a
 finite source equal their batch twins exactly, so these carry full
 SQL oracles — the streaming path is hash-checked, not just smoke-run.
 
@@ -56,10 +58,28 @@ FROM s GROUP BY user_id, session_no
 """
 
 
-def _drain(spark: SparkSession, out: DataFrame, mode: str) -> DataFrame:
+def _drain(
+    spark: SparkSession, out: DataFrame, mode: str, input_paths: list[str]
+) -> DataFrame:
+    """Drain ``out`` into a fresh memory table through the harness,
+    which sizes its state partitions from ``input_paths``."""
     name = "pmrs_" + uuid.uuid4().hex[:12]
-    run_available_now(out, f"/tmp/pmr_stream_ckpt/{name}", output_mode=mode, query_name=name)
+    run_available_now(
+        out,
+        f"/tmp/pmr_stream_ckpt/{name}",
+        output_mode=mode,
+        query_name=name,
+        input_paths=input_paths,
+    )
     return spark.table(name)
+
+
+def _events(sf_dir: str) -> list[str]:
+    return [f"{sf_dir}/events.parquet"]
+
+
+def _documents(sf_dir: str) -> list[str]:
+    return [f"{sf_dir}/documents.parquet"]
 
 
 @query(
@@ -76,7 +96,7 @@ def t1s_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 streaming form, complete-mode drain — hash-equal to the batch
     tumbling aggregate (and to DuckDB date_trunc buckets)."""
     stream = with_watermark(read_events_stream(spark, sf_dir))
-    return _drain(spark, tumbling_counts(stream), "complete")
+    return _drain(spark, tumbling_counts(stream), "complete", _events(sf_dir))
 
 
 @query(
@@ -89,7 +109,7 @@ def t3s_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 streaming form — native session-window state, checked against
     the portable gap-and-islands SQL."""
     stream = with_watermark(read_events_stream(spark, sf_dir))
-    return _drain(spark, session_counts(stream), "complete")
+    return _drain(spark, session_counts(stream), "complete", _events(sf_dir))
 
 
 @query(
@@ -111,7 +131,7 @@ def t2s_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming state, complete-mode drain hash-equal to the batch
     window explosion."""
     stream = with_watermark(read_events_stream(spark, sf_dir))
-    return _drain(spark, sliding_counts(stream), "complete")
+    return _drain(spark, sliding_counts(stream), "complete", _events(sf_dir))
 
 
 @query("t5s_stream_dedup", oracle=None, survey="T5", category="streaming")
@@ -121,7 +141,7 @@ def t5s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality is asserted in tests/test_streaming.py."""
     stream = with_watermark(read_events_stream(spark, sf_dir), "1 day")
     out = dedup_within_watermark(stream).select("user_id", "event_type")
-    return _drain(spark, out, "append")
+    return _drain(spark, out, "append", _events(sf_dir))
 
 
 @query(
@@ -151,7 +171,7 @@ def t5b_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return _drain(spark, out, "append")
+    return _drain(spark, out, "append", _events(sf_dir))
 
 
 @query(
@@ -176,7 +196,7 @@ def x5s_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is also the correct reading of an update-mode changelog at
     any scale: last-write-wins per key."""
     stream = read_events_stream(spark, sf_dir)
-    drained = _drain(spark, running_user_totals(stream), "update")
+    drained = _drain(spark, running_user_totals(stream), "update", _events(sf_dir))
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.expr("max_by(total_value, n_events)").alias("total_value"),
@@ -222,7 +242,7 @@ def t7s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
         (F.unix_micros(F.col("r.ts")) - F.unix_micros(F.col("l.ts"))).alias("lag_us"),
     )
-    return _drain(spark, out, "append")
+    return _drain(spark, out, "append", _events(sf_dir))
 
 
 @query(
@@ -257,7 +277,7 @@ def l13s_stream_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
     )
-    return _drain(spark, out, "complete")
+    return _drain(spark, out, "complete", _documents(sf_dir))
 
 
 @query(
@@ -295,10 +315,13 @@ def t8s_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "pmrs_" + uuid.uuid4().hex[:12]
     path = f"/tmp/pmr_stream_sink/{name}"
     out = deterministic_split(read_documents_stream(spark, sf_dir), "doc_id")
-    q = sink_stream_foreach_batch(
-        out, path, f"/tmp/pmr_stream_ckpt/{name}", partition_cols=["split"]
+    sink_stream_foreach_batch(
+        out,
+        path,
+        f"/tmp/pmr_stream_ckpt/{name}",
+        partition_cols=["split"],
+        input_paths=_documents(sf_dir),
     )
-    q.awaitTermination()
     lake = spark.read.parquet(path)
     return lake.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars")
@@ -360,14 +383,14 @@ def t9s_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("day_us", F.col("hour_us") - F.pmod(F.col("hour_us"), day_us))
     )
-    q = sink_stream_merge_upsert(
+    sink_stream_merge_upsert(
         hourly,
         path,
         f"/tmp/pmr_stream_ckpt/{name}",
         keys=["hour_us", "event_type"],
         partition_col="day_us",
+        input_paths=_events(sf_dir),
     )
-    q.awaitTermination()
     partials = spark.read.parquet(path)
     return partials.groupBy(
         F.timestamp_micros(F.col("day_us")).alias("day"), "event_type"
@@ -403,7 +426,7 @@ def t3r_session_paced_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch = materialize_paced_replay(spark, sf_dir, n_chunks=8)
     try:
         stream = with_watermark(read_events_stream(spark, scratch))
-        return _drain(spark, session_counts(stream), "complete")
+        return _drain(spark, session_counts(stream), "complete", _events(scratch))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -467,7 +490,7 @@ def t7o_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r.event_id").alias("click_id"),
             (F.unix_micros(F.col("r.ts")) - F.unix_micros(F.col("l.ts"))).alias("lag_us"),
         )
-        drained = _drain(spark, out, "append")
+        drained = _drain(spark, out, "append", _events(scratch))
         # Sentinel residue (user_id -1) never emits matched rows — it
         # stays inside the final horizon — but guard anyway.
         return drained.filter(F.col("user_id") >= 0)
@@ -549,7 +572,7 @@ def t12_multi_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_views",
             "n_clicks",
         )
-        drained = _drain(spark, joined, "append")
+        drained = _drain(spark, joined, "append", _events(scratch))
         # Sentinel residue: the flush rows are user -1 (view) / -2
         # (click), which can never join to each other — filter anyway.
         return drained.filter(F.col("user_id") >= 0)
@@ -649,7 +672,7 @@ def t13_agg_after_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "peak_hour",
             )
         )
-        return _drain(spark, daily, "append")
+        return _drain(spark, daily, "append", _events(scratch))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -713,15 +736,12 @@ def s24_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("ddl", SUPPLIER_DDL)
         .load()
     )
-    q = (
-        stream.writeStream.format("pmr_fixedwidth")
-        .option("path", dst)
-        .option("spec", spec)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream,
+        ckpt,
+        input_paths=[src],
+        sink=lambda w: w.format("pmr_fixedwidth").option("path", dst).option("spec", spec),
     )
-    q.awaitTermination()
     back = (
         spark.read.format("pmr_fixedwidth")
         .option("path", dst)
@@ -787,7 +807,7 @@ def s21_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_suppliers"),
         money_sum("s_acctbal").alias("total_bal"),
     )
-    return _drain(spark, agg, "complete")
+    return _drain(spark, agg, "complete", [path])
 
 
 @query(
@@ -835,7 +855,9 @@ def t14_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(dround("value", 4).cast("decimal(20,4)")).alias("sum_raw"),
     )
-    run_available_now(agg, ckpt, output_mode="complete", query_name=name)
+    run_available_now(
+        agg, ckpt, output_mode="complete", query_name=name, input_paths=_events(sf_dir)
+    )
     meta = (
         spark.read.format("state-metadata")
         .load(ckpt)

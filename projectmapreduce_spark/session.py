@@ -36,11 +36,12 @@ _RUNTIME_CONF = {
     # Python-source pushdown — JVM sources and filterless reads plan
     # identically either way.
     "spark.sql.python.filterPushdown.enabled": "true",
-    # Streaming stateful operators key their state store on the shuffle
-    # partition count and AQE does not coalesce them — 200 near-empty
-    # state tasks per micro-batch on local fixtures.  Batch plans are
-    # unaffected (AQE re-coalesces).  On a real cluster this is sized
-    # to cores × ~2 by the deployment, not left at the 200 default.
+    # Sizes batch shuffles only; AQE coalesces them per stage.  Streaming
+    # state is NOT sized by this pin: a stateful operator keeps one state
+    # store per shuffle partition, AQE never coalesces those, and every
+    # micro-batch pays one task per store, so the drain harness
+    # (streaming.core.run_available_now) sets the count for each drain
+    # from its input bytes and restores this value after it.
     "spark.sql.shuffle.partitions": "32",
 }
 
@@ -79,9 +80,11 @@ def derive_shuffle_partitions(
     this and let AQE coalesce per-stage); ``min_partitions`` floors at
     the cluster's core count so small inputs still use every core.
 
-    The local tiers pin shuffle=32 (cores×1, see _RUNTIME_CONF note);
-    SCALING.md "Shuffle-partition sizing" measures a heavy sf1 query
-    under the pinned vs derived counts.
+    The local tiers pin shuffle=32 (cores×1) for BATCH shuffles only;
+    streaming state partitions are sized per drain by this rule
+    (``streaming.core.state_partitions``, ``min_partitions=2``), never
+    by the pin.  SCALING.md "Shuffle-partition sizing" measures a heavy
+    sf1 query under the pinned vs derived counts.
     """
     if input_bytes < 0:
         raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
@@ -128,6 +131,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Progress bars would fill the driver's captured stdout tail.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if shuffle_partitions is not None:

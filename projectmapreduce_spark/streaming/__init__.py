@@ -15,8 +15,8 @@ from projectmapreduce_spark.streaming.core import (
     session_counts,
     sink_stream_foreach_batch,
     sink_stream_merge_upsert,
-    sink_stream_parquet,
     sliding_counts,
+    state_partitions,
     stream_static_join,
     stream_stream_interval_join,
     tumbling_counts,
@@ -35,8 +35,8 @@ __all__ = [
     "session_counts",
     "sink_stream_foreach_batch",
     "sink_stream_merge_upsert",
-    "sink_stream_parquet",
     "sliding_counts",
+    "state_partitions",
     "stream_static_join",
     "append_watermark_flush_file",
     "stream_stream_interval_join",

@@ -23,8 +23,13 @@ custom metrics and recovered output hash-equal to batch.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from projectmapreduce_spark.session import derive_shuffle_partitions, scan_size_bytes
 
 # The events fixture schema, declared explicitly: a streaming source
 # cannot infer schema.  ``ts`` storage differs across fixture
@@ -225,24 +230,55 @@ def stream_stream_interval_join(
     return la.join(ra, cond, how)
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
 def run_available_now(
     out: DataFrame,
     checkpoint_dir: str,
     output_mode: str = "append",
     query_name: str = "pmr_stream",
+    input_paths: Sequence[str] = (),
+    sink: Callable[[DataStreamWriter], DataStreamWriter] | None = None,
 ) -> None:
-    """Drain the finite source into an in-memory sink and stop — the
-    deterministic replay harness for equivalence tests.  Results land
-    in the ``query_name`` temp view."""
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """The one drain harness: run ``out`` to the end of its finite
+    source under the availableNow trigger and wait for it.  Results
+    land in an in-memory sink, queryable as the ``query_name`` temp
+    view, unless ``sink`` configures another sink on the writer
+    (foreachBatch, a file or connector format).
+
+    State partitions are sized from the stream's input, not inherited
+    from the session's batch shuffle count: a stateful operator keeps
+    one state store per shuffle partition, AQE never coalesces them,
+    and every micro-batch — even an empty one — pays one task per
+    store.  So ``spark.sql.shuffle.partitions`` is set to
+    ``state_partitions(input_paths)`` for the drain and the caller's
+    value is put back after it, also when the query fails.  A restart
+    over an existing checkpoint keeps the count recorded in it (Spark
+    restores it from the offset log), whatever is set here.
+    """
+    spark = out.sparkSession
+    prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions(spark, input_paths)))
+    try:
+        writer = (
+            out.writeStream.queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        writer = sink(writer) if sink else writer.format("memory")
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+
+
+def state_partitions(spark: SparkSession, input_paths: Sequence[str]) -> int:
+    """State-partition count for a drain over ``input_paths``:
+    ``derive_shuffle_partitions`` of their on-disk bytes, floored at 2
+    so state still spreads over more than one store and core."""
+    return derive_shuffle_partitions(
+        scan_size_bytes(spark, list(input_paths)), min_partitions=2
     )
-    q.awaitTermination()
 
 
 def sink_stream_foreach_batch(
@@ -252,7 +288,8 @@ def sink_stream_foreach_batch(
     partition_cols: list[str] | None = None,
     output_mode: str = "append",
     include_batch_id: bool = True,
-):
+    input_paths: Sequence[str] = (),
+) -> None:
     """T8 — foreachBatch escape hatch: apply an arbitrary BATCH write
     to each micro-batch.  This is how streams reach sinks the
     streaming engine has no native writer for (JDBC, upserts,
@@ -263,8 +300,8 @@ def sink_stream_foreach_batch(
     The idempotency recipe used here is the standard one: partition
     the output by ``batch_id`` (plus the caller's columns) and
     dynamic-partition-overwrite — a replayed batch rewrites exactly
-    its own partitions, so duplicates cannot accumulate.  Returns the
-    StreamingQuery handle.
+    its own partitions, so duplicates cannot accumulate.  Drains
+    through ``run_available_now`` (state sized from ``input_paths``).
 
     With ``include_batch_id=False`` the layout is keyed by the
     caller's columns ALONE — usable when each emitted row should
@@ -289,12 +326,12 @@ def sink_stream_foreach_batch(
             batch_df = batch_df.withColumn("batch_id", F.lit(batch_id))
         overwrite_partitions(batch_df, path, cols)
 
-    return (
-        out.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out,
+        checkpoint_dir,
+        output_mode,
+        input_paths=input_paths,
+        sink=lambda w: w.foreachBatch(write_batch),
     )
 
 
@@ -304,7 +341,8 @@ def sink_stream_merge_upsert(
     checkpoint_dir: str,
     keys: list[str],
     partition_col: str,
-):
+    input_paths: Sequence[str] = (),
+) -> None:
     """T9s — continuous-aggregate maintenance sink: MERGE each
     update-mode micro-batch's changed group rows into a partitioned
     partials lake.
@@ -324,7 +362,8 @@ def sink_stream_merge_upsert(
     merging identical rows twice is a no-op.  Cost per batch tracks
     the CHANGED partitions (a watermark-horizon's worth of days), not
     the table — the hypertable maintenance contract at 100 TB-day
-    volume.
+    volume.  Drains through ``run_available_now`` (state sized from
+    ``input_paths``).
     """
     from projectmapreduce_spark.io import (
         has_committed_files,
@@ -362,27 +401,12 @@ def sink_stream_merge_upsert(
             merged.localCheckpoint(eager=True), path, [partition_col]
         )
 
-    return (
-        out.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def sink_stream_parquet(
-    out: DataFrame, path: str, checkpoint_dir: str, output_mode: str = "append"
-):
-    """Production-shaped sink: exactly-once parquet append via the
-    checkpointed file sink.  Returns the StreamingQuery handle."""
-    return (
-        out.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        out,
+        checkpoint_dir,
+        "update",
+        input_paths=input_paths,
+        sink=lambda w: w.foreachBatch(write_batch),
     )
 
 

@@ -69,8 +69,17 @@ def main() -> int:
     lines = [
         "## Shuffle-partition sizing (round 4)",
         "",
-        "The local tiers pin `spark.sql.shuffle.partitions=32` (cores×1).",
-        "That constant does NOT travel to 100 TB; the deployment rule is",
+        "The local tiers pin `spark.sql.shuffle.partitions=32` (cores×1)",
+        "for BATCH shuffles only, which AQE coalesces per stage.  Streaming",
+        "state is never sized by the pin: a stateful operator keeps one",
+        "state store per shuffle partition, AQE does not coalesce them, and",
+        "every micro-batch, even an empty one, pays one task per store.  The",
+        "drain harness (`streaming.core.run_available_now`) therefore sets",
+        "the count for each drain to `derive_shuffle_partitions(input",
+        "bytes, min_partitions=2)` and restores the pin after it; a restart",
+        "keeps the count recorded in its checkpoint.",
+        "",
+        "The pinned constant does NOT travel to 100 TB; the deployment rule is",
         "`session.derive_shuffle_partitions`: `clamp(ceil(input_bytes /",
         "128 MiB), cores, 200k)`, installed as both the static shuffle",
         "count and AQE's `initialPartitionNum` so AQE coalesces DOWN",

@@ -167,12 +167,10 @@ def main() -> int:
             .select(F.col("window.start").alias("win_start"), "event_type", "n")
         )
         t0 = time.perf_counter()
-        q = sink_stream_foreach_batch(agg, path, ckpt)
-        q.awaitTermination()
+        sink_stream_foreach_batch(agg, path, ckpt)
         wall = time.perf_counter() - t0
         n_sink = spark.read.parquet(path).count()
-        q = sink_stream_foreach_batch(agg, path, ckpt)  # replay drain
-        q.awaitTermination()
+        sink_stream_foreach_batch(agg, path, ckpt)  # replay drain
         n_sink2 = spark.read.parquet(path).count()
         rows.append(
             f"| t8 foreachBatch parquet sink | {tier} | {wall:.1f} s | — | — | "

@@ -73,6 +73,16 @@ def test_near_dup_minhash_precision(spark):
         assert r.jaccard == pytest.approx(truth[(r.id_a, r.id_b)])
 
 
+@pytest.mark.parametrize("threshold", [0.0, -0.5, 1.5, float("nan")])
+def test_near_dup_minhash_refuses_threshold_outside_unit_interval(spark, threshold):
+    """A threshold at or below 0 would keep candidate pairs sharing no
+    token (n_inter = 0); one above 1 can match nothing.  Both are
+    refused when the plan is built, before any job runs."""
+    d = scan(spark, SF_SMOKE, "documents")
+    with pytest.raises(ValueError, match="threshold"):
+        near_dup_minhash(d, "doc_id", "text", threshold=threshold)
+
+
 def test_simhash_near_dups_have_small_hamming(spark):
     # SimHash needs enough tokens for the per-bit vote sums to be
     # stable; ~40 tokens with 1 token changed keeps expected bit flips

@@ -180,11 +180,10 @@ def test_merge_upsert_propagates_corrupt_lake_errors(spark, tmp_path):
     agg = stream.groupBy(
         F.to_date("ts").alias("day"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n"))
-    q = sink_stream_merge_upsert(
-        agg, str(lake), str(tmp_path / "ckpt"), keys=["day", "user_id"], partition_col="day"
-    )
     with pytest.raises(StreamingQueryException):
-        q.awaitTermination()
+        sink_stream_merge_upsert(
+            agg, str(lake), str(tmp_path / "ckpt"), keys=["day", "user_id"], partition_col="day"
+        )
 
 
 def test_has_committed_files_ignores_committer_debris(spark, tmp_path):
@@ -611,24 +610,32 @@ def test_t14_state_metadata_facts(spark):
     statestore source's per-partition read layout."""
     import shutil
 
-    from projectmapreduce_spark.streaming import read_events_stream, run_available_now
+    from projectmapreduce_spark.streaming import (
+        read_events_stream,
+        run_available_now,
+        state_partitions,
+    )
 
     name = "pmrt14meta_" + uuid.uuid4().hex[:8]
     ckpt = f"/tmp/pmr_stream_ckpt/{name}"
+    inputs = [f"{SF_SMOKE}/events.parquet"]
     try:
         agg = (
             read_events_stream(spark, SF_SMOKE)
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        run_available_now(agg, ckpt, output_mode="complete", query_name=name)
+        run_available_now(
+            agg, ckpt, output_mode="complete", query_name=name, input_paths=inputs
+        )
 
         meta = spark.read.format("state-metadata").load(ckpt).collect()
         assert len(meta) == 1, "exactly one stateful operator in the plan"
         row = meta[0]
         assert row.operatorName == "stateStoreSave"
         assert row.stateStoreName == "default"
-        assert row.numPartitions == int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # the drain harness sizes state from the input, not the batch pin
+        assert row.numPartitions == state_partitions(spark, inputs)
         assert row.minBatchId == 0 and row.maxBatchId >= 0
 
         st = spark.read.format("statestore").load(ckpt)
@@ -643,3 +650,40 @@ def test_t14_state_metadata_facts(spark):
         assert st.select("partition_id").distinct().count() > 1
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
+    """The drain harness sizes a stream's state partitions from its
+    input bytes, not from the session's batch shuffle count, and
+    leaves that count as it found it — also when the query fails."""
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from projectmapreduce_spark.session import derive_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    events = f"{SF_SMOKE}/events.parquet"
+    before = spark.conf.get(key)
+    agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").count()
+
+    ckpt = str(tmp_path / "ok")
+    name = "sized_" + uuid.uuid4().hex[:8]
+    run_available_now(agg, ckpt, "complete", name, input_paths=[events])
+    assert spark.conf.get(key) == before
+    (meta,) = spark.read.format("state-metadata").load(ckpt).collect()
+    expect = derive_shuffle_partitions(os.path.getsize(events), min_partitions=2)
+    assert meta.numPartitions == expect != int(before)
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("sink failure")
+
+    with pytest.raises(StreamingQueryException):
+        run_available_now(
+            agg,
+            str(tmp_path / "fail"),
+            "complete",
+            input_paths=[events],
+            sink=lambda w: w.foreachBatch(fail),
+        )
+    assert spark.conf.get(key) == before

@@ -542,11 +542,16 @@ def gate_verdict(
             out["per_query_n_common"] = len(common)
             if pq_norm > PER_QUERY_MEDIAN_MAX:
                 out["verdict"] = "fail"
-                out["fail_reason"] = (
+                # Appended, so a sentinel-vs-probe reason set above
+                # survives when both checks trip.
+                reason = (
                     "per-query warm median "
                     f"{pq_med:.2f}x the committed reference window "
                     f"({pq_norm:.2f}x after probe normalization) — "
                     "exceeds the 1.15x allowance; code regression"
+                )
+                out["fail_reason"] = "; ".join(
+                    r for r in (out.get("fail_reason"), reason) if r
                 )
     # IO-drift caveat (round 11): sentinel normalization absorbs CPU
     # drift, not IO drift — on a slow-disk window IO-/Python-worker-

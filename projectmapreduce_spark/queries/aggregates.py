@@ -671,7 +671,7 @@ FROM orders
 GROUP BY o_orderpriority
 """,
     survey="A14,A1,S5,U1",
-    category="agg",
+    category="aggregate",
 )
 def a14_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14: incremental aggregate maintenance — the incremental-rollup
@@ -748,7 +748,7 @@ SELECT l_returnflag,
 FROM sums
 """,
     survey="A15,A1",
-    category="aggregates",
+    category="aggregate",
 )
 def a15_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15: second-moment statistics (variance, stddev, covariance,
@@ -814,7 +814,7 @@ FROM (
 GROUP BY 1
 """,
     survey="A10,U1",
-    category="aggregates",
+    category="aggregate",
 )
 def a10b_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10's inverse surface: ``df.unpivot`` (melt) — columns back to
@@ -890,7 +890,7 @@ SELECT 'URGENT&HIGH' AS grp,
 FROM inter
 """,
     survey="A16",
-    category="agg",
+    category="aggregate",
 )
 def a16_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16: KMV (k-minimum-values) distinct sketch WITH SET ALGEBRA —
@@ -976,7 +976,7 @@ WHERE event_type IS NOT NULL
 GROUP BY event_type
 """,
     survey="A17",
-    category="aggregates",
+    category="aggregate",
 )
 def a17_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17: approx_top_k heavy-hitter sketch (Spark 4.1) — the native

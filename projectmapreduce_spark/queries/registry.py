@@ -26,6 +26,12 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 # Extra metadata per query (survey row id, category) for reporting.
 META: dict[str, dict[str, Any]] = {}
+# The category tags reports group by (tests/test_coverage.py holds
+# every query to them).
+CATEGORIES = frozenset(
+    "aggregate composite events filter flagship functions io join llm mr "
+    "projection setop sort streaming udf window".split()
+)
 
 
 def query(name: str, oracle: str | None = None, survey: str = "", category: str = ""):

@@ -11,6 +11,9 @@ Correctness-critical settings (FIXTURES.md "Notes for test authors"):
 
 ``ensure_session_conf`` is applied by every declared query because the
 driver owns the SparkSession; we must not assume it was built here.
+It can only force runtime confs.  Static confs such as the codegen
+cache size (``CODEGEN_CACHE_MAX_ENTRIES``) take effect only on a
+session ``get_spark`` builds; a session built elsewhere keeps its own.
 """
 
 from __future__ import annotations
@@ -44,6 +47,26 @@ _RUNTIME_CONF = {
     # from its input bytes and restores this value after it.
     "spark.sql.shuffle.partitions": "32",
 }
+
+
+# Spark's cache of compiled generated classes (the static conf
+# spark.sql.codegen.cache.maxEntries, default 100) is an LRU.  One run of
+# the full catalog at sf0.01 in one session compiles 2673 distinct classes
+# (scripts/codegen_working_set.py), the 136-query headline alone 1646,
+# and even the five olap_sql benchmark queries 112 at sf0.001, so at the
+# default every warm pass evicts and recompiles classes it compiled a
+# pass earlier.
+# The cap holds the measured working set, rounded up to a power of two.
+# Static: set when the session is built, so a session built elsewhere
+# keeps its own value (ensure_session_conf cannot change it).
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far, one per codegen
+    cache miss (Spark's ``CodegenMetrics`` compile counter)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
@@ -134,6 +157,7 @@ def get_spark(
         # Progress bars would fill the driver's captured stdout tail.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -877,6 +877,24 @@ def supplier_write_frame(spark, sf_dir: str):
     return sup, w
 
 
+def _dataset_files(src: str) -> list[tuple[str, os.stat_result]]:
+    """``(path relative to src, stat)`` for every data file of a
+    parquet dataset: the file itself for a single-file layout, else
+    every file in the tree, partition subdirectories included.  Entries
+    named ``.*``/``_*`` (``_SUCCESS``, ``.crc``, ``_temporary``) are
+    skipped at every level.  Raises OSError if ``src`` is missing."""
+    if not os.path.isdir(src):  # single-file layout (the testdata tiers)
+        return [(os.path.basename(src), os.stat(src))]
+    out = []
+    for root, dirs, files in os.walk(src):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        for f in files:
+            if not f.startswith((".", "_")):
+                path = os.path.join(root, f)
+                out.append((os.path.relpath(path, src), os.stat(path)))
+    return out
+
+
 def supplier_fixture_files(sf_dir: str) -> int:
     """Data-sized file count for the fixed-width supplier fixture
     (round 12, guide §6 file sizing): ~8 MiB of source parquet per
@@ -889,14 +907,7 @@ def supplier_fixture_files(sf_dir: str) -> int:
     exercised on every tier."""
     src = os.path.join(sf_dir, "supplier.parquet")
     try:
-        if os.path.isdir(src):  # multi-file dataset layout
-            n_bytes = sum(
-                e.stat().st_size
-                for e in os.scandir(src)
-                if not e.name.startswith((".", "_"))
-            )
-        else:  # single-file layout (the testdata tiers)
-            n_bytes = os.path.getsize(src)
+        n_bytes = sum(st.st_size for _, st in _dataset_files(src))
     except OSError:
         return 8
     return int(max(2, min(64, 1 + n_bytes // (8 << 20))))
@@ -951,15 +962,9 @@ def ensure_supplier_fixed_width(
     # triples change on any rewrite without reading data bytes.
     src = os.path.join(sf_dir, "supplier.parquet")
     try:
-        if os.path.isdir(src):  # multi-file dataset layout
-            fingerprint = sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(src)
-                if not e.name.startswith((".", "_"))
-            )
-        else:  # single-file layout (the testdata tiers)
-            st = os.stat(src)
-            fingerprint = [(os.path.basename(src), st.st_size, st.st_mtime_ns)]
+        fingerprint = sorted(
+            (name, st.st_size, st.st_mtime_ns) for name, st in _dataset_files(src)
+        )
     except OSError:
         fingerprint = []
     key = {

@@ -164,6 +164,20 @@ def test_per_query_uniform_regression_fails_even_with_contended_probe():
     assert out["per_query_median_ratio"] == 1.5
 
 
+def test_both_checks_tripping_keep_both_fail_reasons():
+    # Sentinels 2x slow with probes at calibration trips the
+    # sentinel-vs-probe check; every reference query at 1.5x trips the
+    # per-query median.  The second reason must not overwrite the first.
+    w = _warm(2.0)
+    w.update({f"q{i}": 1.5 for i in range(30)})
+    out = bench.gate_verdict(
+        w, _fast_total(), probe_sec=0.39, probe_par_sec=2.45, bench_ref=_ref()
+    )
+    assert out["verdict"] == "fail"
+    assert "uniform code regression" in out["fail_reason"]
+    assert "per-query warm median" in out["fail_reason"]
+
+
 def test_per_query_contended_window_normalizes_away():
     # Same 1.5x warm ratios, but the parallel probe reads 1.9x vs a
     # reference window pinned at 1.0x: relative drift 1.9 normalizes

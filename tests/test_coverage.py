@@ -5,7 +5,7 @@ line — this test makes a silent coverage regression impossible)."""
 from __future__ import annotations
 
 from projectmapreduce_spark.queries import ORACLES, QUERIES
-from projectmapreduce_spark.queries.registry import META
+from projectmapreduce_spark.queries.registry import CATEGORIES, META
 
 # The rows-only FLOOR (round 11, VERDICT r10 task 7): the 14 declared
 # queries that are non-SQL-expressible BY NATURE — each value is the
@@ -216,6 +216,14 @@ def test_every_survey_row_has_a_declared_query():
 def test_no_unknown_survey_tags():
     unknown = _covered().keys() - SURVEY_IDS
     assert not unknown, f"query survey tags not in SURVEY §2: {sorted(unknown)}"
+
+
+def test_every_category_tag_is_canonical():
+    """Reports group by ``category``; one tag per family (the
+    aggregates once carried ``agg``/``aggregates`` variants)."""
+    bad = {n: m["category"] for n, m in META.items() if m["category"] not in CATEGORIES}
+    assert not bad, f"non-canonical category tags: {bad}"
+    assert {m["category"] for m in META.values()} == CATEGORIES
 
 
 def test_oracle_names_subset_of_queries():

@@ -387,6 +387,76 @@ def test_fixed_width_roundtrip_rowwise(spark):
     assert n_files >= 2  # multi-file planning stays exercised
 
 
+def _sparse(path, n_bytes: int) -> None:
+    """A file of ``n_bytes`` apparent size that occupies no disk."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with open(path, "wb") as fh:
+        fh.truncate(n_bytes)
+
+
+def test_supplier_fixture_sizing_walks_nested_layouts(tmp_path):
+    """A partitioned supplier dataset is sized (and fingerprinted) from
+    every data file in its tree, skipping ``.``/``_`` entries at every
+    level; flat and single-file layouts size as before.  No Spark."""
+    import json
+
+    from projectmapreduce_spark.sources.fixed_width import (
+        _dataset_files,
+        ensure_supplier_fixed_width,
+        supplier_fixture_files,
+    )
+
+    mib = 1 << 20
+    nested = tmp_path / "nested"
+    src = nested / "supplier.parquet"
+    _sparse(src / "s_nationkey=0" / "part-0.parquet", 20 * mib)
+    _sparse(src / "s_nationkey=1" / "part-1.parquet", 20 * mib)
+    _sparse(src / "s_nationkey=2" / "s_region=a" / "part-2.parquet", 20 * mib)
+    # Skipped at every level: markers, checksums, hidden and temp dirs.
+    _sparse(src / "_SUCCESS", 100 * mib)
+    _sparse(src / "s_nationkey=1" / ".part-1.parquet.crc", 100 * mib)
+    _sparse(src / "s_nationkey=2" / "_temporary" / "part-9.parquet", 100 * mib)
+    _sparse(src / ".staging" / "part-8.parquet", 100 * mib)
+
+    files = sorted(name for name, _ in _dataset_files(str(src)))
+    assert files == [
+        "s_nationkey=0/part-0.parquet",
+        "s_nationkey=1/part-1.parquet",
+        "s_nationkey=2/s_region=a/part-2.parquet",
+    ]
+    assert supplier_fixture_files(str(nested)) == 1 + 60 // 8
+
+    # The reuse marker's fingerprint covers the nested files: a marker
+    # keyed on them is reused without writing (so no session is needed).
+    fixture = tmp_path / "fixture"
+    fixture.mkdir()
+    fingerprint = sorted(
+        [name, st.st_size, st.st_mtime_ns] for name, st in _dataset_files(str(src))
+    )
+    (fixture / "_PMR_FIXTURE.json").write_text(
+        json.dumps(
+            {
+                "sf_dir": str(nested),
+                "n_files": 8,
+                "src_fingerprint": fingerprint,
+                "w": 42,
+            }
+        )
+    )
+    assert ensure_supplier_fixed_width(None, str(nested), str(fixture)) == 42
+
+    flat = tmp_path / "flat"
+    _sparse(flat / "supplier.parquet" / "part-0.parquet", 9 * mib)
+    _sparse(flat / "supplier.parquet" / "part-1.parquet", 9 * mib)
+    _sparse(flat / "supplier.parquet" / "_SUCCESS", 100 * mib)
+    assert supplier_fixture_files(str(flat)) == 1 + 18 // 8
+
+    single = tmp_path / "single"
+    _sparse(single / "supplier.parquet", 17 * mib)
+    assert supplier_fixture_files(str(single)) == 1 + 17 // 8
+    assert supplier_fixture_files(str(tmp_path / "missing")) == 8
+
+
 def test_stream_source_paced_offsets(spark, tmp_path):
     """The paced streaming form (filesPerTrigger) must advance offsets
     INCREMENTALLY across micro-batches under a processing-time trigger

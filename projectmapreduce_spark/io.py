@@ -6,12 +6,21 @@ columns down to the parquet row-group level (verify with
 ``df.explain`` → ``PushedFilters`` / ``ReadSchema``).  Sinks write
 parquet — optionally hive-partitioned (S6) so downstream readers get
 partition pruning for free.
+
+``scan`` infers each local table's schema once per file set and conf
+state (``_read_parquet``): without a schema, every
+``spark.read.parquet`` runs a one-task Spark job to read a footer,
+even for files it read a moment ago.  Remote paths (any URI scheme but
+``file:``) skip that memo: there one footer job per query is noise,
+and listing a remote tree to fingerprint it costs more than the job.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import stat
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -103,19 +112,100 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP_NTZ; cast to TimestampType.  With the engine's forced
       UTC session timezone the wall-clock values are bit-identical to
       what DuckDB's naive TIMESTAMP yields, so oracle hashes agree.
+
+    The schema of a local table is inferred once per file set and conf
+    state and passed back on later scans (``_read_parquet``); a remote
+    table is inferred on every scan, as listing it would cost more.
+    Each call still returns a fresh DataFrame with fresh attribute ids,
+    so one query may scan the same table twice.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
+
+
+# Confs that parquet schema inference and partition discovery read.  A
+# remembered schema is reused only while every one of them is as it was
+# when Spark inferred it.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    # Partition discovery types timestamp-like directory values with it.
+    "spark.sql.timestampType",
+    # Decides whether an unreadable footer fails inference or is skipped.
+    "spark.sql.files.ignoreCorruptFiles",
+)
+
+# Absolute local path -> (file fingerprint, conf values, inferred schema).
+# One entry per path, replaced when the files or the confs change.
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _files_fingerprint(path: str) -> tuple:
+    """``(relative path, size, mtime_ns, inode)`` of every regular file
+    under ``path``, ``_``/``.`` files included (``_common_metadata`` can
+    decide what Spark infers); a single file is its own one-entry list."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+    entries = []
+    for root, _dirs, files in os.walk(path, followlinks=True):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            if stat.S_ISREG(st.st_mode):
+                rel = os.path.relpath(full, path)
+                entries.append((rel, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(entries))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema
+    once per file set and conf state, then passes it back with
+    ``spark.read.schema(s)``: that read runs no Spark job, where an
+    inferring read runs one to read a footer.  The memo never returns a
+    schema Spark would not infer now: it is keyed on the absolute path
+    and reused only while the files' fingerprint and the inference confs
+    are unchanged.  Paths with a URI scheme other than ``file:``,
+    relative paths (the JVM resolves them against its own working
+    directory) and glob patterns read as before, with no memo."""
+    url = urlparse(path)
+    local = url.path if url.scheme == "file" else path
+    if (
+        url.scheme not in ("", "file")
+        or not os.path.isabs(local)
+        or any(c in path for c in "*?[{")
+    ):
+        return spark.read.parquet(path)
+    local = os.path.normpath(local)
+    try:
+        fingerprint = _files_fingerprint(local)
+    except OSError:  # missing, or changing under the walk: Spark decides
+        return spark.read.parquet(path)
+    # One get per conf: ``spark.conf.getAll`` is a single call into the
+    # JVM but copies the whole conf map back entry by entry, ~30x slower.
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    hit = _SCHEMAS.get(local)
+    if hit is not None and hit[0] == fingerprint and hit[1] == confs:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[local] = (fingerprint, confs, df.schema)
+    return df
 
 
 def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:

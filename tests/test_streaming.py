@@ -283,15 +283,7 @@ def test_left_outer_stream_join_emits_outer_tail_across_batches(spark, tmp_path)
 
     def drain(out, ckpt):
         name = "t7o_test_" + uuid.uuid4().hex[:8]
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(out, str(ckpt), "append", name, input_paths=[scratch])
         return spark.table(name).filter(F.col("user_id") >= 0)
 
     scratch = materialize_paced_replay(spark, SF_SMOKE, n_chunks=6)

@@ -19,7 +19,8 @@ truncated and BENCH_r03/r04 recorded ``parsed: null``):
   chars: ``{"metric": "suite_wall_sec", "value": <cold total>,
   "unit": "sec", "value_warm": <warm total>, "sf": ..,
   "n_headline": .., "n_declared_queries": ..,
-  "queries": {<10 slowest cold>}, "detail": "BENCH_DETAIL.json"}``.
+  "queries": {<10 slowest cold>}, "machine": {"loadavg": [..]},
+  "gate": {"verdict": "unjudged"}, "detail": "BENCH_DETAIL.json"}``.
 
 ``value`` totals FIRST-run (cold) times — directly comparable with
 BENCH_r01/r02 and the BASELINE.md table.  ``value_warm`` is a second
@@ -27,8 +28,16 @@ execution of the same plan in the same JVM: codegen, broadcast builds
 and Python-worker pools are already hot, so warm numbers isolate
 per-byte execution cost.  Queries whose cold time is dominated by
 one-time codegen (l2_minhash_lsh's 64-wide min-aggregate,
-x6_map_in_arrow's worker spin-up) show a large cold/warm gap —
-regression detection should compare warm-to-warm.
+x6_map_in_arrow's worker spin-up) show a large cold/warm gap.
+
+The run gives no pass/fail verdict.  Its numbers are wall times from
+one window on one host, and that host's speed moves them as much as
+the code does, so no single run can tell the two apart.  A change is
+judged instead by paired runs of the benchmark in ``perfbench/``:
+``python3 perfbench/run.py --workload <w> --seed <n> --seconds 15
+--trace 0`` on the parent and on the change, alternating, at least 10
+pairs, on seeds not used in development; its passes are timed in CPU
+seconds, which host CPU steal does not inflate.
 """
 
 from __future__ import annotations
@@ -313,317 +322,10 @@ HEADLINE = [
 ]
 
 
-# ---------------------------------------------------------------------------
-# Bench gate (round 9, VERDICT r8 task 4).  The old "<120 s full
-# suite" envelope predates the 129-query headline and was crossed by
-# host-window drift alone, so the gate is now (a) WARM-total (cold is
-# dominated by one-time codegen/worker spin-up — see module docstring)
-# and (b) DRIFT-NORMALIZED by the compute-bound sentinel set, the
-# five queries BASELINE.md's adjudication method already designates as
-# host-speed probes (they stay flat under IO load, so their warm-ratio
-# median against the pinned reference isolates host speed from code
-# regressions).  verdict = normalized_warm ≤ 0.80 s/query × headline
-# size (the committed r8 record reads ~0.60 s/query normalized, so the
-# gate trips at a ~1.3× genuine per-byte regression while absorbing
-# pure host drift and headline growth).
-SENTINEL_WARM_REF = {
-    # Pinned from the committed r8 driver-window run (BENCH_DETAIL.json
-    # @ c610f3d: 112.4 s cold / 77.4 s warm over 129 queries).
-    "m6_word_count": 0.218,
-    "l31_bigram_perplexity": 0.952,
-    "l2_minhash_lsh": 2.491,
-    "l11g_jpeg_decode": 0.801,
-    "c18_part_supplier_breadth": 0.488,
-}
-GATE_WARM_PER_QUERY = 0.80  # normalized seconds per headline query
-
-# Out-of-repo host-speed probe (round 10, ADVICE r9 medium): the five
-# sentinels are themselves code under test, so a UNIFORM code
-# regression (session conf, codegen, Arrow batch-size change slowing
-# everything ~2×) would inflate the sentinel median equally and be
-# normalized away as "host drift".  The probe is pure
-# hashlib + single-threaded DuckDB over generate_series — zero repo
-# code, zero Spark — so it moves ONLY with host speed.  If the
-# sentinel median runs ≫ the probe ratio, the slowdown is in the code,
-# not the host, and the gate fails regardless of normalization.
-#
-# Round 11 (VERDICT r10 task 2 / ADVICE r10 medium): the probe gained
-# a PARALLEL component.  The single-threaded probe prices disk +
-# single-core speed but is BLIND to CPU contention: at loadavg 10 on
-# 32 cores the 32-wide Spark sentinels degraded ~1.85× while the
-# serial probe read 1.12× — a 4%-margin near-miss from a false
-# "uniform code regression" verdict in round 10.  The parallel probe
-# saturates every core the same way the sentinels do (N-thread
-# hashlib over GIL-releasing 1 MiB buffers + a threads=N DuckDB
-# aggregate), so contention inflates it proportionally; the gate
-# cross-checks the sentinel median against max(serial, parallel)
-# ratio — both host axes priced, neither able to masquerade as code.
-HOST_PROBE_REF = 0.39  # best-of-3 seconds, pinned on the round-10 host
-# Best-of-3 seconds for the parallel probe, pinned on a QUIET
-# round-11 window (loadavg m1 0.81 on 32 cores; four consecutive
-# best-of-3 readings 2.45/2.63/2.53/2.45 — stamped in BASELINE.md
-# § bench gate).
-HOST_PROBE_PAR_REF = 2.45
-SENTINEL_VS_PROBE_MAX = 1.6  # sentinel median may exceed probe ratio by ≤1.6×
-
-# Round 12 (VERDICT r11 task 2): the sentinel-vs-probe allowance passed
-# round 11 by 0.6% — a genuine ~1.5× uniform regression could hide
-# inside any contended window because the allowance is keyed to
-# max-of-probes alone.  Second, WINDOW-INDEPENDENT signal: the median
-# of per-query warm ratios against the COMMITTED reference window
-# (BENCH_REF.json, re-pinned whenever the baseline is re-established),
-# normalized by relative probe drift between the two windows.  This is
-# BASELINE.md's adjudication method promoted into the verdict itself:
-# the median over ~136 headline queries is robust to a handful of
-# legitimately changed queries, and probe normalization absorbs host
-# drift, so a surviving >1.15× median is a code regression.
-PER_QUERY_MEDIAN_MAX = 1.15
-PER_QUERY_MIN_COMMON = 20  # skip the check below this overlap
-BENCH_REF_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_REF.json"
-)
-
-
-def load_bench_ref() -> dict | None:
-    """Committed per-query warm reference window, or None if absent."""
-    try:
-        with open(BENCH_REF_PATH) as fh:
-            ref = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    return ref if isinstance(ref.get("warm"), dict) else None
-
-
-def _median(vals: list[float]) -> float:
-    vs = sorted(vals)
-    mid = len(vs) // 2
-    return vs[mid] if len(vs) % 2 else (vs[mid - 1] + vs[mid]) / 2
-
-
-def host_probe() -> float | None:
-    """Best-of-3 pure-Python+DuckDB micro-task (~0.4 s/run),
-    single-threaded: prices serial CPU + allocator speed only."""
-    import hashlib
-
-    try:
-        import duckdb
-    except ImportError:
-        return None
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        buf = b"x" * 4096
-        for _ in range(20000):
-            buf = hashlib.md5(buf).digest() * 256
-        con = duckdb.connect()
-        con.execute("PRAGMA threads=1")
-        con.execute(
-            "SELECT sum(hash(i)) FROM generate_series(1, 20000000) t(i)"
-        ).fetchall()
-        con.close()
-        return time.perf_counter() - t0
-
-    return min(one() for _ in range(3))
-
-
-def host_probe_parallel() -> float | None:
-    """Best-of-3 ALL-CORE micro-task: N worker threads each md5-hash
-    1 MiB buffers (hashlib releases the GIL above 2047 bytes, so the
-    threads genuinely occupy N cores) plus a threads=N DuckDB
-    aggregate.  Under external CPU contention this degrades like the
-    32-wide Spark sentinels — the axis the serial probe cannot see."""
-    import hashlib
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        import duckdb
-    except ImportError:
-        return None
-
-    cpus = os.cpu_count() or 8
-
-    def hash_task() -> None:
-        buf = b"x" * (1 << 20)
-        for _ in range(48):
-            hashlib.md5(buf).digest()
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=cpus) as pool:
-            list(pool.map(lambda _: hash_task(), range(cpus)))
-        con = duckdb.connect()
-        con.execute(f"PRAGMA threads={cpus}")
-        con.execute(
-            "SELECT sum(hash(i)) FROM generate_series(1, 200000000) t(i)"
-        ).fetchall()
-        con.close()
-        return time.perf_counter() - t0
-
-    return min(one() for _ in range(3))
-
-
-def gate_verdict(
-    warm: dict[str, float],
-    total_warm: float,
-    probe_sec: float | None = None,
-    probe_par_sec: float | None = None,
-    disk_mb_s: float | None = None,
-    bench_ref: dict | None = None,
-) -> dict:
-    ratios = sorted(
-        warm[q] / ref for q, ref in SENTINEL_WARM_REF.items() if warm.get(q)
-    )
-    if not ratios:
-        return {"verdict": "no_sentinels"}
-    med = _median(ratios)
-    normalized = total_warm / med if med > 0 else total_warm
-    limit = GATE_WARM_PER_QUERY * len(HEADLINE)
-    out = {
-        "warm_total": round(total_warm, 1),
-        "sentinel_median_ratio": round(med, 3),
-        "normalized_warm": round(normalized, 1),
-        "limit": round(limit, 1),
-        "verdict": "pass" if normalized <= limit else "fail",
-    }
-    # Cross-check the sentinels against the out-of-repo probes: a
-    # slow host slows them too; a code regression slows only the
-    # sentinels.  The effective ratio is the WORST host axis —
-    # max(serial, parallel) — so CPU contention (visible only to the
-    # parallel probe) and disk/serial slowness (visible to both) each
-    # raise the allowance; probe_ratio floors at 1.0 so a
-    # faster-than-calibration host can't manufacture a failure.
-    ratios_seen = []
-    if probe_sec is not None:
-        probe_ratio = probe_sec / HOST_PROBE_REF
-        out["host_probe_sec"] = round(probe_sec, 3)
-        out["host_probe_ratio"] = round(probe_ratio, 3)
-        ratios_seen.append(probe_ratio)
-    if probe_par_sec is not None:
-        par_ratio = probe_par_sec / HOST_PROBE_PAR_REF
-        out["host_probe_par_sec"] = round(probe_par_sec, 3)
-        out["host_probe_par_ratio"] = round(par_ratio, 3)
-        ratios_seen.append(par_ratio)
-    if ratios_seen:
-        worst = max(ratios_seen)
-        if med > SENTINEL_VS_PROBE_MAX * max(worst, 1.0):
-            out["verdict"] = "fail"
-            out["fail_reason"] = (
-                "sentinel median exceeds both host-probe ratios — uniform "
-                "code regression, not host drift"
-            )
-    # Per-query-median cross-check vs the committed reference window
-    # (round 12, VERDICT r11 task 2).  Window-independent: each query's
-    # warm time is compared to its own pinned reference, the MEDIAN of
-    # those ratios is divided by the probe drift between the two
-    # windows, and anything still > PER_QUERY_MEDIAN_MAX fails.  Only
-    # the median must clear the bar, so individual slow queries (or a
-    # few refactored ones) cannot trip it — but a uniform slowdown of
-    # the whole suite cannot hide behind one contended probe reading.
-    if bench_ref is None:
-        bench_ref = load_bench_ref()
-    if bench_ref:
-        ref_warm = bench_ref["warm"]
-        common = [
-            warm[q] / ref_warm[q]
-            for q in warm
-            if warm.get(q) and ref_warm.get(q)
-        ]
-        if len(common) >= PER_QUERY_MIN_COMMON:
-            pq_med = _median(common)
-            now_worst = max(ratios_seen) if ratios_seen else 1.0
-            ref_worst = float(bench_ref.get("probe_worst_ratio", 1.0))
-            # Relative drift between this window and the pinned one;
-            # floored at 1.0 so a faster-than-reference host cannot
-            # manufacture a failure.
-            drift = max(max(now_worst, 1.0) / max(ref_worst, 1.0), 1.0)
-            pq_norm = pq_med / drift
-            out["per_query_median_ratio"] = round(pq_med, 3)
-            out["per_query_median_normalized"] = round(pq_norm, 3)
-            out["per_query_n_common"] = len(common)
-            if pq_norm > PER_QUERY_MEDIAN_MAX:
-                out["verdict"] = "fail"
-                # Appended, so a sentinel-vs-probe reason set above
-                # survives when both checks trip.
-                reason = (
-                    "per-query warm median "
-                    f"{pq_med:.2f}x the committed reference window "
-                    f"({pq_norm:.2f}x after probe normalization) — "
-                    "exceeds the 1.15x allowance; code regression"
-                )
-                out["fail_reason"] = "; ".join(
-                    r for r in (out.get("fail_reason"), reason) if r
-                )
-    # IO-drift caveat (round 11): sentinel normalization absorbs CPU
-    # drift, not IO drift — on a slow-disk window IO-/Python-worker-
-    # bound queries run 3-9× while the compute sentinels stay flat,
-    # so the NORMALIZED total can fail spuriously (observed this
-    # round: disk probe 124 MB/s, normalized 135.6 > 108, per-query
-    # median vs the committed window 0.976 — pure host).  Don't flip
-    # the verdict (a real IO regression, e.g. a scan suddenly reading
-    # every column, must still fail) — flag it for the adjudication
-    # method BASELINE.md records.
-    if out["verdict"] == "fail" and disk_mb_s is not None and disk_mb_s < 300:
-        out["warning"] = (
-            f"io_degraded_window: disk probe {disk_mb_s:.0f} MB/s — "
-            "adjudicate per-query warm medians vs the committed "
-            "BENCH_DETAIL window (BASELINE.md § bench caveat) before "
-            "reading this fail as a code regression"
-        )
-    return out
-
-
-def machine_condition(sf_dir: str) -> dict:
-    """Stamp the host's IO/load weather into the artifact (VERDICT r5
-    item 5): rounds 4 and 5 both recorded headline swings of ±40% that
-    a rerun on a quiet machine erased entirely.  ``loadavg`` is the
-    1/5/15-minute triple; ``disk_mb_s`` is a ~1-second sequential read
-    over the sf dir's parquet files (1 MiB chunks, capped at 256 MiB).
-    Reading: loadavg[0] ≳ 4 or disk_mb_s ≲ 300 on this host means
-    IO-bound queries will read 2–5× slow while compute-bound ones stay
-    flat — adjudicate an apparent regression against these fields
-    before rerunning (BASELINE.md § bench caveat)."""
-    cond: dict = {"loadavg": None, "disk_mb_s": None}
-    try:
-        cond["loadavg"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        pass
-    try:
-        files = sorted(
-            (
-                os.path.join(r, f)
-                for r, _, fs in os.walk(sf_dir)
-                for f in fs
-                if f.endswith(".parquet")
-            ),
-            key=os.path.getsize,
-            reverse=True,
-        )
-        chunk, budget_s, cap = 1 << 20, 1.0, 256 << 20
-        read = 0
-        t0 = time.perf_counter()
-        for path in files:
-            with open(path, "rb", buffering=0) as fh:
-                while True:
-                    buf = fh.read(chunk)
-                    if not buf:
-                        break
-                    read += len(buf)
-                    if time.perf_counter() - t0 > budget_s or read >= cap:
-                        break
-            if time.perf_counter() - t0 > budget_s or read >= cap:
-                break
-        dt = time.perf_counter() - t0
-        if dt > 0 and read:
-            cond["disk_mb_s"] = round(read / dt / (1 << 20), 1)
-    except OSError:
-        pass
-    return cond
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    cond = machine_condition(sf_dir)
+    machine = {"loadavg": [round(x, 2) for x in os.getloadavg()]}
     spark = get_spark(app_name="pmr-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -652,13 +354,9 @@ def main() -> None:
         print(json.dumps({"q": name, "cold": times[name], "warm": warm[name]}))
         sys.stdout.flush()
 
-    gate = gate_verdict(
-        warm,
-        total_warm,
-        probe_sec=host_probe(),
-        probe_par_sec=host_probe_parallel(),
-        disk_mb_s=cond.get("disk_mb_s"),
-    )
+    # One run cannot tell the code's speed from the host's (module
+    # docstring), so it states no verdict.
+    gate = {"verdict": "unjudged"}
     detail = {
         "metric": "suite_wall_sec",
         "value": round(total, 3),
@@ -669,7 +367,7 @@ def main() -> None:
         "value_warm": round(total_warm, 3),
         "n_headline": len(HEADLINE),
         "n_declared_queries": len(QUERIES),
-        "machine": cond,
+        "machine": machine,
         "gate": gate,
     }
     detail_path = os.path.join(
@@ -692,7 +390,7 @@ def main() -> None:
         "n_headline": len(HEADLINE),
         "n_declared_queries": len(QUERIES),
         "queries": slowest,
-        "machine": cond,
+        "machine": machine,
         "gate": gate,
         "detail": "BENCH_DETAIL.json",
     }

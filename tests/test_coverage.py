@@ -226,6 +226,15 @@ def test_every_category_tag_is_canonical():
     assert {m["category"] for m in META.values()} == CATEGORIES
 
 
+def test_bench_headline_names_declared_queries_once():
+    """bench.py and scripts/codegen_working_set.py --headline both run
+    ``bench.HEADLINE``: every name must be declared, and none twice."""
+    from bench import HEADLINE
+
+    assert set(HEADLINE) <= set(QUERIES), sorted(set(HEADLINE) - set(QUERIES))
+    assert len(HEADLINE) == len(set(HEADLINE))
+
+
 def test_oracle_names_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
 

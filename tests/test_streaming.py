@@ -219,16 +219,13 @@ def test_paced_replay_runs_many_microbatches(spark, tmp_path):
     try:
         stream = with_watermark(read_events_stream(spark, scratch))
         name = "paced_test_" + uuid.uuid4().hex[:8]
-        q = (
-            session_counts(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            session_counts(stream),
+            str(tmp_path / "ckpt"),
+            "complete",
+            name,
+            input_paths=[scratch],
         )
-        q.awaitTermination()
         offsets = list((tmp_path / "ckpt" / "offsets").iterdir())
         assert len(offsets) >= 6, f"expected >=6 micro-batches, got {len(offsets)}"
         got = {tuple(r) for r in spark.table(name).collect()}

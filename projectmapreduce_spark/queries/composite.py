@@ -11,6 +11,7 @@ globally sorts the facts.
 from __future__ import annotations
 
 import datetime
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1623,6 +1624,7 @@ def c29_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     read time, so the default distributed-sequence index (a
     zipWithIndex-shaped extra stage) is never materialized."""
     import pyspark.pandas as ps
+    from pyspark.pandas.utils import PandasAPIOnSparkAdviceWarning
 
     path = f"{sf_dir}/orders.parquet"
     pdf = ps.read_parquet(path, index_col="o_orderkey")
@@ -1638,7 +1640,12 @@ def c29_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .reset_index()
     )
-    sdf = out.to_spark()
+    # to_spark() without index_col advises that the index is dropped;
+    # dropping it is the point, since keeping the default index would
+    # materialize it as an extra stage.
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", PandasAPIOnSparkAdviceWarning)
+        sdf = out.to_spark()
     return sdf.select(
         "o_orderpriority",
         F.col("n_orders").cast("long").alias("n_orders"),

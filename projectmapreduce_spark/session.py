@@ -14,13 +14,38 @@ driver owns the SparkSession; we must not assume it was built here.
 It can only force runtime confs.  Static confs such as the codegen
 cache size (``CODEGEN_CACHE_MAX_ENTRIES``) take effect only on a
 session ``get_spark`` builds; a session built elsewhere keeps its own.
+
+JVM start-up.  When ``get_spark`` launches the driver JVM, it starts it
+from a static AppCDS archive (``cds.py``) that maps the ~16.5k classes
+start-up would otherwise load and verify from the Spark jars.  The
+archive is used when it exists for the current JDK, jar set and class
+list, and the configured Spark conf directory holds only ``*.template``
+files: ``SPARK_CONF_DIR`` then points at an empty engine-owned directory
+for the launch only (the JVM refuses an archive when a non-empty
+directory is on the classpath) and is restored afterwards, and
+``spark.driver.defaultJavaOptions`` carries ``-XX:SharedArchiveFile``
+with CDS messages routed to stderr.  When the archive is missing, the
+session starts exactly as without one and ``get_spark`` starts one
+detached, niced builder that dumps it (about a minute of one core) for the
+sessions after.  A real ``spark-defaults.conf`` or log4j config in the
+conf directory turns the archive off rather than dropping it, and an
+archive the JVM rejects only costs the unshared start-up.
+
+Out of reach: a session the driver builds (its JVM is already running),
+and executors.  On a cluster the same archive, dumped against the
+executors' classpath, would go through
+``spark.executor.defaultJavaOptions``; local mode has no executor JVMs.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from projectmapreduce_spark import cds
 
 # Runtime-settable confs every query depends on.  Session timezone is a
 # runtime conf in Spark, so we can enforce it even on a session we did
@@ -172,5 +197,14 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.path.join(os.environ["SPARK_GRAFT_SCRATCH"], "warehouse"),
         )
-    spark = builder.getOrCreate()
+    # Only a launch can map the archive; an existing gateway keeps its JVM.
+    target = cds.locate(_find_spark_home()) if SparkContext._gateway is None else None
+    if target is not None and os.path.isfile(target.archive):
+        builder = builder.config("spark.driver.defaultJavaOptions", cds.java_options(target))
+        with cds.spark_conf_dir(target.conf_dir):
+            spark = builder.getOrCreate()
+    else:
+        spark = builder.getOrCreate()
+        if target is not None:
+            cds.start_build(target)
     return ensure_session_conf(spark)

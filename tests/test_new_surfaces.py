@@ -6,11 +6,14 @@ declared query; these tests pin the properties the oracle cannot see."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
+from pyspark.pandas.utils import PandasAPIOnSparkAdviceWarning
 from pyspark.sql import functions as F
 
 from projectmapreduce_spark.queries import QUERIES
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_c22_recursion_matches_closed_form(spark):
@@ -1378,3 +1381,14 @@ def test_c32_hint_family_shuffle_hash_and_rebalance(spark):
     # Hints never change semantics: the rebalanced scan returns the
     # same multiset cardinality as the plain one.
     assert rb.count() == spark.table("li_h").count()
+
+
+def test_c29_gives_no_index_advice(spark):
+    """c29 drops the pandas-on-Spark index on purpose (keeping the default
+    index would add a stage), so building and collecting it must not
+    print pyspark's advice that the index is lost."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        QUERIES["c29_pandas_on_spark"](spark, SF_SMOKE).collect()
+    advice = [w for w in caught if issubclass(w.category, PandasAPIOnSparkAdviceWarning)]
+    assert advice == [], [str(w.message) for w in advice]

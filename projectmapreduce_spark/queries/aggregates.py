@@ -650,13 +650,27 @@ def a13_hll_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL row computed by unioning the five segment sketches (not by
     re-aggregating the input).  Rows-only: DuckDB's HLL is a different
     algorithm; the error bound vs exact is pinned in
-    tests/test_operators.py."""
+    tests/test_operators.py.
+
+    The union folds the segment sketches in segment order.  A DataSketches
+    union's estimate depends on the order and grouping of its merges, so
+    ``hll_union_agg`` over the shuffled sketches would read differently
+    under each shuffle partition count (1492-1518 at sf0.01 for counts
+    1-200)."""
     c = scan(spark, sf_dir, "customer")
     per = c.groupBy("c_mktsegment").agg(F.hll_sketch_agg("c_custkey").alias("sk"))
     seg = per.select("c_mktsegment", F.hll_sketch_estimate("sk").alias("est_distinct"))
-    union = per.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est_distinct")
-    ).select(F.lit("ALL").alias("c_mktsegment"), "est_distinct")
+    sks = F.array_sort(F.collect_list(F.struct("c_mktsegment", "sk")))
+    union = per.agg(sks.alias("sks")).select(
+        F.lit("ALL").alias("c_mktsegment"),
+        F.hll_sketch_estimate(
+            F.aggregate(
+                F.slice("sks", 2, F.size("sks")),
+                F.col("sks")[0]["sk"],
+                lambda acc, x: F.hll_union(acc, x["sk"]),
+            )
+        ).alias("est_distinct"),
+    )
     return seg.unionByName(union)
 
 

@@ -37,8 +37,10 @@ def x1_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize/deserialize per ROW; kept off every hot path and here
     only to prove the capability)."""
 
+    # No type hints: on a plain @F.udf pyspark tries to infer an Arrow
+    # eval type from them and warns when it cannot.
     @F.udf(returnType=LongType())
-    def mixed_score(priority: str, key: int) -> int:
+    def mixed_score(priority, key):
         return len(priority) + (key % 10)
 
     o = scan(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)

@@ -64,15 +64,17 @@ _RUNTIME_CONF = {
     # Python-source pushdown — JVM sources and filterless reads plan
     # identically either way.
     "spark.sql.python.filterPushdown.enabled": "true",
-    # Sizes batch shuffles only; AQE coalesces them per stage.  Streaming
-    # state is NOT sized by this pin: a stateful operator keeps one state
-    # store per shuffle partition, AQE never coalesces those, and every
-    # micro-batch pays one task per store, so the drain harness
-    # (streaming.core.run_available_now) sets the count for each drain
-    # from its input bytes and restores this value after it.
-    "spark.sql.shuffle.partitions": "32",
 }
 
+# The batch shuffle count is not a constant in the table above:
+# ensure_session_conf sets it to the session's parallelism
+# (``defaultParallelism``, cores×1), one reduce partition per task slot,
+# which AQE coalesces per stage.  Streaming state is not sized by this
+# count: a stateful operator keeps one state store per shuffle partition,
+# AQE never coalesces those, and every micro-batch pays one task per
+# store, so the drain harness (streaming.core.run_available_now) sets the
+# count for each drain from its input bytes and restores the session's
+# value after it.
 
 # Spark's cache of compiled generated classes (the static conf
 # spark.sql.codegen.cache.maxEntries, default 100) is an LRU.  One run of
@@ -98,9 +100,13 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Force the runtime confs this engine's correctness depends on.
 
     Called at the top of every declared query — the driver may hand us
-    a session built with different defaults.
+    a session built with different defaults.  The batch shuffle count
+    is the session's parallelism, so a cluster session shuffles into as
+    many partitions as it has task slots.
     """
-    for k, v in _RUNTIME_CONF.items():
+    parallelism = str(spark.sparkContext.defaultParallelism)
+    conf = {**_RUNTIME_CONF, "spark.sql.shuffle.partitions": parallelism}
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf locked by driver
@@ -128,11 +134,13 @@ def derive_shuffle_partitions(
     this and let AQE coalesce per-stage); ``min_partitions`` floors at
     the cluster's core count so small inputs still use every core.
 
-    The local tiers pin shuffle=32 (cores×1) for BATCH shuffles only;
-    streaming state partitions are sized per drain by this rule
-    (``streaming.core.state_partitions``, ``min_partitions=2``), never
-    by the pin.  SCALING.md "Shuffle-partition sizing" measures a heavy
-    sf1 query under the pinned vs derived counts.
+    Batch shuffles run at the cores floor of this rule (the session's
+    ``defaultParallelism``, set by ``ensure_session_conf``), where every
+    local tier sits; streaming state partitions are sized per drain by
+    this rule (``streaming.core.state_partitions``,
+    ``min_partitions=2``).  SCALING.md "Shuffle-partition sizing"
+    measures a heavy sf1 query under Spark's default, a pinned 32 and
+    the cores count.
     """
     if input_bytes < 0:
         raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
@@ -158,14 +166,14 @@ def scan_size_bytes(spark: SparkSession, paths: list[str]) -> int:
 def get_spark(
     app_name: str = "projectmapreduce-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession with engine defaults.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``.  Shuffle
-    partitions default to the core count — at 100 TB on a real cluster
-    this would be sized to ~128 MB per post-shuffle partition and then
-    AQE-coalesced, which is why AQE stays on.
+    partitions are the core count (``ensure_session_conf``) — at 100 TB
+    on a real cluster this would be sized to ~128 MB per post-shuffle
+    partition (``derive_shuffle_partitions``) and then AQE-coalesced,
+    which is why AQE stays on.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     builder = (
@@ -184,10 +192,6 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    else:
-        builder = builder.config("spark.sql.shuffle.partitions", "32")
     # Parallel-process isolation: when $SPARK_GRAFT_SCRATCH redirects
     # io.scratch_path, redirect the managed-table warehouse with it —
     # concurrent harness processes (sweeps, bench, plan reports) would

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Shuffle-partition sizing study (round-4 VERDICT task 8): measure a
-heavy sf1 query under the pinned local count (32 = cores), the Spark
-default (200), and the bytes-derived count
-(`session.derive_shuffle_partitions`, 128 MiB target with a
-cores-floor), and write the SHUFFLE section of SCALING.md.
+"""Shuffle-partition sizing study: measure a heavy sf1 query under the
+Spark default (200), the former local pin (32), and the session's
+cores, which is both the engine's batch count and the floor of the
+bytes-derived count (`session.derive_shuffle_partitions`, 128 MiB
+target), and write the SHUFFLE section of SCALING.md.
 
 The derivation is the rule the 100 TB deployment uses instead of any
 pinned constant: partitions = clamp(ceil(input_bytes / 128 MiB),
@@ -11,10 +11,14 @@ cores, initialPartitionNum-ceiling), installed as BOTH
 spark.sql.shuffle.partitions and AQE's initialPartitionNum so the
 static plan starts near target size and AQE coalesces per-stage.
 
-`ensure_session_conf` pins shuffle=32 at the top of every declared
-query (streaming state stores key on it), so each condition here
-overrides that pin via the _RUNTIME_CONF table before construction —
-the documented study-only knob.
+`ensure_session_conf` sets the shuffle count to the session's cores at
+the top of every declared query, and the query's build already runs
+shuffles (its iterations checkpoint eagerly), so each condition wraps
+the registry's call to it and sets its own count after it — a
+study-only override.
+
+Usage: SPARK_GRAFT_CPUS=<cores> python scripts/scaling_shuffle.py
+(needs the sf1 tier from scripts/make_scale_data.py).
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from md_sections import replace_section
 from projectmapreduce_spark import session as sess
-from projectmapreduce_spark.queries import QUERIES
+from projectmapreduce_spark.queries import QUERIES, registry
 from projectmapreduce_spark.session import derive_shuffle_partitions, scan_size_bytes
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -38,7 +42,12 @@ CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
 def timed(spark, n_parts: int) -> float:
-    sess._RUNTIME_CONF["spark.sql.shuffle.partitions"] = str(n_parts)
+    def ensure_conf_at(s):
+        sess.ensure_session_conf(s)
+        s.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        return s
+
+    registry.ensure_session_conf = ensure_conf_at
     spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(n_parts))
     try:
         best = float("inf")
@@ -48,7 +57,7 @@ def timed(spark, n_parts: int) -> float:
             best = min(best, time.perf_counter() - t0)
         return best
     finally:
-        sess._RUNTIME_CONF["spark.sql.shuffle.partitions"] = "32"
+        registry.ensure_session_conf = sess.ensure_session_conf
         spark.conf.unset("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
 
 
@@ -60,8 +69,11 @@ def main() -> int:
     derived = derive_shuffle_partitions(in_bytes, min_partitions=CORES)
     QUERIES[QUERY](spark, BIG).count()  # warm JVM + footers
 
+    conditions = [("spark-default 200", 200), ("former pin 32", 32), (f"session cores {CORES}", CORES)]
+    if derived != CORES:
+        conditions.append((f"derived {derived}", derived))
     results = {}
-    for label, n in (("spark-default 200", 200), ("pinned cores 32", 32), (f"derived {derived}", derived)):
+    for label, n in conditions:
         results[label] = timed(spark, n)
         print(f"{label}: {results[label]:.1f} s", flush=True)
 
@@ -69,17 +81,20 @@ def main() -> int:
     lines = [
         "## Shuffle-partition sizing (round 4)",
         "",
-        "The local tiers pin `spark.sql.shuffle.partitions=32` (cores×1)",
-        "for BATCH shuffles only, which AQE coalesces per stage.  Streaming",
-        "state is never sized by the pin: a stateful operator keeps one",
-        "state store per shuffle partition, AQE does not coalesce them, and",
-        "every micro-batch, even an empty one, pays one task per store.  The",
-        "drain harness (`streaming.core.run_available_now`) therefore sets",
-        "the count for each drain to `derive_shuffle_partitions(input",
-        "bytes, min_partitions=2)` and restores the pin after it; a restart",
-        "keeps the count recorded in its checkpoint.",
+        "Batch shuffles run at the session's cores: `ensure_session_conf`",
+        "sets `spark.sql.shuffle.partitions` to `defaultParallelism`",
+        "(cores×1) at the top of every declared query, and AQE coalesces",
+        "per stage from there.  Until then a constant 32 was forced on",
+        "every session.  Streaming state is never sized by this count: a",
+        "stateful operator keeps one state store per shuffle partition, AQE",
+        "does not coalesce them, and every micro-batch, even an empty one,",
+        "pays one task per store.  The drain harness",
+        "(`streaming.core.run_available_now`) therefore sets the count for",
+        "each drain to `derive_shuffle_partitions(input bytes,",
+        "min_partitions=2)` and restores the session's count after it; a",
+        "restart keeps the count recorded in its checkpoint.",
         "",
-        "The pinned constant does NOT travel to 100 TB; the deployment rule is",
+        "The cores count is the floor of the deployment rule,",
         "`session.derive_shuffle_partitions`: `clamp(ceil(input_bytes /",
         "128 MiB), cores, 200k)`, installed as both the static shuffle",
         "count and AQE's `initialPartitionNum` so AQE coalesces DOWN",
@@ -87,7 +102,7 @@ def main() -> int:
         "",
         "| input | derived partitions |",
         "|---|---|",
-        f"| sf1 documents ({in_bytes / 1e6:.0f} MB, this host, {CORES} cores) | {derived} (cores floor) |",
+        f"| sf1 documents ({in_bytes / 1e6:.0f} MB, {CORES} cores) | {derived} (cores floor) |",
         f"| 1 TiB | {derive_shuffle_partitions(1024 * GiB):,} |",
         f"| 100 TB | {derive_shuffle_partitions(100 * 10**12):,} (ceiling; AQE coalesces per-stage) |",
         "",

@@ -1392,3 +1392,14 @@ def test_c29_gives_no_index_advice(spark):
         QUERIES["c29_pandas_on_spark"](spark, SF_SMOKE).collect()
     advice = [w for w in caught if issubclass(w.category, PandasAPIOnSparkAdviceWarning)]
     assert advice == [], [str(w.message) for w in advice]
+
+
+def test_x1_gives_no_eval_type_warning(spark):
+    """x1's row-at-a-time UDF is a plain @F.udf; type hints on it make
+    pyspark try to infer an Arrow eval type and warn that it cannot, so
+    building and collecting it must not print that warning."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        QUERIES["x1_scalar_udf"](spark, SF_SMOKE).collect()
+    infer = [str(w.message) for w in caught if "Cannot infer the eval type" in str(w.message)]
+    assert infer == [], infer

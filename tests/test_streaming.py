@@ -653,26 +653,33 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
 
     key = "spark.sql.shuffle.partitions"
     events = f"{SF_SMOKE}/events.parquet"
-    before = spark.conf.get(key)
-    agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").count()
-
-    ckpt = str(tmp_path / "ok")
-    name = "sized_" + uuid.uuid4().hex[:8]
-    run_available_now(agg, ckpt, "complete", name, input_paths=[events])
-    assert spark.conf.get(key) == before
-    (meta,) = spark.read.format("state-metadata").load(ckpt).collect()
     expect = derive_shuffle_partitions(os.path.getsize(events), min_partitions=2)
-    assert meta.numPartitions == expect != int(before)
+    # The session's count follows its cores, which may equal the derived
+    # count; give the session a different one so the sizing shows.
+    saved = spark.conf.get(key)
+    before = str(expect + 1)
+    spark.conf.set(key, before)
+    try:
+        agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").count()
 
-    def fail(batch_df, batch_id):
-        raise RuntimeError("sink failure")
+        ckpt = str(tmp_path / "ok")
+        name = "sized_" + uuid.uuid4().hex[:8]
+        run_available_now(agg, ckpt, "complete", name, input_paths=[events])
+        assert spark.conf.get(key) == before
+        (meta,) = spark.read.format("state-metadata").load(ckpt).collect()
+        assert meta.numPartitions == expect != int(before)
 
-    with pytest.raises(StreamingQueryException):
-        run_available_now(
-            agg,
-            str(tmp_path / "fail"),
-            "complete",
-            input_paths=[events],
-            sink=lambda w: w.foreachBatch(fail),
-        )
-    assert spark.conf.get(key) == before
+        def fail(batch_df, batch_id):
+            raise RuntimeError("sink failure")
+
+        with pytest.raises(StreamingQueryException):
+            run_available_now(
+                agg,
+                str(tmp_path / "fail"),
+                "complete",
+                input_paths=[events],
+                sink=lambda w: w.foreachBatch(fail),
+            )
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, saved)

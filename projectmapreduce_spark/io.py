@@ -13,6 +13,11 @@ state (``_read_parquet``): without a schema, every
 even for files it read a moment ago.  Remote paths (any URI scheme but
 ``file:``) skip that memo: there one footer job per query is noise,
 and listing a remote tree to fingerprint it costs more than the job.
+
+``scan_stream`` is the streaming twin of ``scan``: the same table
+layout rule, the same remembered schema (a file stream cannot infer
+one) and the same ``events.ts`` typing, so a streaming query and its
+batch twin read one table definition.
 """
 
 from __future__ import annotations
@@ -23,7 +28,8 @@ import stat
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 # All driver-provided tables (TESTDATA.md + FIXTURES.md).
 TABLES = (
@@ -75,6 +81,19 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
+def scan_size_bytes(spark: SparkSession, paths: list[str]) -> int:
+    """Total on-disk size of the inputs a job will shuffle — the
+    ``input_bytes`` feed for ``session.derive_shuffle_partitions``.
+    Summed driver-side over the listed roots via ``hadoop_fs`` (any
+    supported filesystem scheme)."""
+    total = 0
+    for p in paths:
+        fs, jpath = hadoop_fs(spark, p)
+        if fs.exists(jpath):
+            total += fs.getContentSummary(jpath).getLength()
+    return total
+
+
 def has_committed_files(spark: SparkSession, path: str) -> bool:
     """True if ``path`` contains at least one COMMITTED data file — a
     file none of whose path segments under ``path`` starts with ``.``
@@ -103,7 +122,8 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` must surface as a session-timezone TimestampType (the
     engine contract every events query and its oracle were verified
     against — window math uses ``unix_micros``, which rejects NTZ).
-    Fixture generations have stored it two ways, both handled here:
+    Fixture generations have stored it in four ways, all handled by
+    ``_typed_events``:
 
     - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; read via
       the nanos-as-long legacy conf and convert with exact integer
@@ -112,6 +132,8 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP_NTZ; cast to TimestampType.  With the engine's forced
       UTC session timezone the wall-clock values are bit-identical to
       what DuckDB's naive TIMESTAMP yields, so oracle hashes agree.
+    - TIMESTAMP(MICROS) UTC and INT96 (Spark's own write default):
+      inferred as TimestampType already.
 
     The schema of a local table is inferred once per file set and conf
     state and passed back on later scans (``_read_parquet``); a remote
@@ -120,25 +142,61 @@ def scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     so one query may scan the same table twice.
     """
     path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return _read_parquet(spark, path)
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    df = _read_parquet(spark, path)
+    return _typed_events(df, df.schema)
+
+
+def scan_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one named table: the streaming twin of
+    :func:`scan`, with the schema and ``events.ts`` typing ``scan``
+    would give the same files.
+
+    A file source wants a directory, so a single-file table
+    (``<name>.parquet`` FILE, the driver fixtures) streams ``sf_dir``
+    scoped by a glob on its name, and a directory table (Spark-written
+    tiers) streams its ``*.parquet`` part files, each its own
+    micro-batch.  ``maxFilesPerTrigger=1`` keeps micro-batches bounded;
+    under the availableNow trigger the stream drains the files and
+    stops, which is how the equivalence tests replay fixtures
+    deterministically.  The schema comes from the memo ``scan`` keeps
+    (``_parquet_schema``); the first read of a table infers it with one
+    footer job."""
+    path = f"{sf_dir}/{name}.parquet"
+    base, glob = (path, "*.parquet") if os.path.isdir(path) else (sf_dir, f"{name}.parquet")
     if name == "events":
-        from pyspark.sql import functions as F
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    schema = _parquet_schema(spark, path)
+    df = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", glob)
+        .parquet(base)
+    )
+    return _typed_events(df, schema) if name == "events" else df
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return _read_parquet(spark, path)
 
+def _typed_events(df: DataFrame, schema: StructType) -> DataFrame:
+    """``events`` with ``ts`` as a session-timezone TimestampType,
+    whichever way the files store it (see :func:`scan`); ``schema`` is
+    ``df``'s, passed in so a stream needs no extra JVM call for it."""
+    ts = schema["ts"].dataType
+    if isinstance(ts, LongType):  # TIMESTAMP(NANOS) read as nanos-as-long
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # Confs that parquet schema inference and partition discovery read.  A
 # remembered schema is reused only while every one of them is as it was
 # when Spark inferred it.
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    _NANOS_AS_LONG,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -184,6 +242,31 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     are unchanged.  Paths with a URI scheme other than ``file:``,
     relative paths (the JVM resolves them against its own working
     directory) and glob patterns read as before, with no memo."""
+    entry, schema = _memo(spark, path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if entry is not None:
+        # Forget tables deleted since they were read (the scratch copies
+        # paced replays stream from), so the memo holds live paths only.
+        for gone in [p for p in _SCHEMAS if not os.path.exists(p)]:
+            del _SCHEMAS[gone]
+        _SCHEMAS[entry[0]] = (entry[1], entry[2], df.schema)
+    return df
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``_read_parquet(spark, path)`` reads with.  A
+    remembered one is returned as is, without building a DataFrame."""
+    _entry, schema = _memo(spark, path)
+    return schema if schema is not None else _read_parquet(spark, path).schema
+
+
+def _memo(spark: SparkSession, path: str) -> tuple[tuple | None, StructType | None]:
+    """``((abs path, fingerprint, conf values), remembered schema)`` for
+    ``path``.  The entry is None for a path the memo skips (see
+    ``_read_parquet``) and the schema is None unless the remembered one
+    was inferred from the same files under the same confs."""
     url = urlparse(path)
     local = url.path if url.scheme == "file" else path
     if (
@@ -191,21 +274,18 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
         or not os.path.isabs(local)
         or any(c in path for c in "*?[{")
     ):
-        return spark.read.parquet(path)
+        return None, None
     local = os.path.normpath(local)
     try:
         fingerprint = _files_fingerprint(local)
     except OSError:  # missing, or changing under the walk: Spark decides
-        return spark.read.parquet(path)
+        return None, None
     # One get per conf: ``spark.conf.getAll`` is a single call into the
     # JVM but copies the whole conf map back entry by entry, ~30x slower.
     confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
     hit = _SCHEMAS.get(local)
-    if hit is not None and hit[0] == fingerprint and hit[1] == confs:
-        return spark.read.schema(hit[2]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[local] = (fingerprint, confs, df.schema)
-    return df
+    fresh = hit is not None and hit[0] == fingerprint and hit[1] == confs
+    return (local, fingerprint, confs), (hit[2] if fresh else None)
 
 
 def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -395,7 +475,7 @@ def upsert_by_rewrite(base: DataFrame, updates: DataFrame, key: str | list[str])
     base table is never shuffled — but a caller handing a base-sized
     batch now gets a sort-merge plan instead of a driver/executor OOM.
     Same defect family as the l2b verification-join fix
-    (operators/dedup.py ``arrays_join="auto"``); pinned both ways in
+    (operators/dedup.py ``_intersect_token_sets``); pinned both ways in
     tests/test_plans.py::test_upsert_join_strategy_follows_size.
     """
     keys = [key] if isinstance(key, str) else list(key)
@@ -545,8 +625,6 @@ def scd2_apply(history: DataFrame, updates: DataFrame, key: str, eff_date: str) 
     because each fold's UPDATE derivation may itself read the prior
     history).
     """
-    from pyspark.sql import functions as F
-
     high = F.lit("9999-12-31").cast("date")
     eff = F.lit(eff_date).cast("date")
     # distinct() guards the batch contract (one row per changed key):

@@ -96,7 +96,6 @@ def ngram_jaccard_join(
     threshold: float,
     n: int = 1,
     prefix_filter: bool = True,
-    arrays_join: str = "auto",
 ) -> DataFrame:
     """EXACT Jaccard similarity join.  Output: (id_a, id_b, jaccard)
     with id_a < id_b and jaccard ≥ threshold.
@@ -118,12 +117,8 @@ def ngram_jaccard_join(
     output-identical to the naive join in tests.)
 
     ``prefix_filter=False`` is the naive inverted-index join kept for
-    differential testing; its verification is a token-join count, so
-    ``arrays_join`` (which picks how the prefix-filtered path attaches
-    the per-doc token arrays) does not apply there.
+    differential testing; its verification is a token-join count.
     """
-    if arrays_join not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"arrays_join must be auto|broadcast|shuffle, got {arrays_join!r}")
     tok = tokens_of(df, id_col, text_col, n)
     sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
     if prefix_filter:
@@ -159,45 +154,11 @@ def ngram_jaccard_join(
         # first cut joined candidates back to (id, token) rows, which
         # shuffles |cands| × doc_len rows — at sf1 (50k docs, t=0.8)
         # that was ~5e9 rows and 100+ GB of spill (observed disk-full).
-        # Instead the per-doc sorted-set table (|docs| rows) is
-        # attached to each candidate pair and the intersection is ONE
-        # map-side array_intersect per pair: shuffle volume is
-        # O(candidates), never O(candidates × doc_len).
-        #
-        # How the arrays table attaches is SIZE-AWARE (``arrays_join``):
-        # "auto" (default) adds no hint — Catalyst broadcasts when its
-        # estimate fits autoBroadcastJoinThreshold and AQE re-checks
-        # with REAL sizes at runtime, so small fixtures get the
-        # broadcast probe and a corpus-scale arrays table gets a
-        # shuffled equi-join keyed on id (the candidate side is narrow
-        # — two ids per row — so that shuffle is O(candidates)).  A
-        # FORCED broadcast here was round-3 verdict defect #3: a
-        # guaranteed driver OOM at 100 TB.  "broadcast"/"shuffle" pin
-        # the mode for differential tests (tests/test_prefix_filter.py
-        # proves both modes output-identical; tests/test_plans.py pins
-        # the shuffle-mode plan to SortMergeJoin).
+        # Each pair now intersects two per-doc token arrays instead.
         arrays = tok.groupBy("id").agg(
             F.sort_array(F.collect_list("token")).alias("toks")
         )
-        if arrays_join == "broadcast":
-            arrays = F.broadcast(arrays)
-        elif arrays_join == "shuffle":
-            arrays = arrays.hint("merge")
-        inter = (
-            cands.join(
-                arrays.select(F.col("id").alias("id_a"), F.col("toks").alias("ta")),
-                "id_a",
-            )
-            .join(
-                arrays.select(F.col("id").alias("id_b"), F.col("toks").alias("tb")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("ta", "tb")).alias("n_inter"),
-            )
-        )
+        inter = _intersect_token_sets(cands, arrays)
     else:
         a = tok.select(F.col("id").alias("id_a"), "token")
         b = tok.select(F.col("id").alias("id_b"), "token")
@@ -215,6 +176,40 @@ def ngram_jaccard_join(
         .join(sb, "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _intersect_token_sets(cands: DataFrame, arrays: DataFrame, *extra) -> DataFrame:
+    """The array-based verify join shared by :func:`ngram_jaccard_join`
+    and :func:`near_dup_minhash`: ``(id_a, id_b, n_inter, *extra)`` for
+    each candidate pair, where ``arrays`` holds ``(id, toks)`` — one
+    distinct token array per doc — and ``extra`` may read the pair's
+    arrays as ``ta``/``tb``.
+
+    The per-doc table (|docs| rows) is attached to each pair and the
+    intersection is ONE map-side ``array_intersect``: shuffle volume is
+    O(candidates), never O(candidates × doc_len).  No join hint: the
+    planner broadcasts the arrays table when its estimate fits
+    ``autoBroadcastJoinThreshold`` and AQE re-checks with real sizes,
+    so small fixtures get the broadcast probe and a corpus-scale table
+    a shuffled equi-join on id (the candidate side is two ids per row).
+    A forced broadcast here would be a certain driver OOM at 100 TB
+    (tests/test_prefix_filter.py drives the sort-merge path)."""
+    return (
+        cands.join(
+            arrays.select(F.col("id").alias("id_a"), F.col("toks").alias("ta")),
+            "id_a",
+        )
+        .join(
+            arrays.select(F.col("id").alias("id_b"), F.col("toks").alias("tb")),
+            "id_b",
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("ta", "tb")).alias("n_inter"),
+            *extra,
+        )
     )
 
 
@@ -352,22 +347,8 @@ def near_dup_minhash(
         .groupBy("id")
         .agg(F.collect_set("token").alias("toks"))
     )
-    inter = (
-        cands.join(
-            arrays.select(F.col("id").alias("id_a"), F.col("toks").alias("ta")),
-            "id_a",
-        )
-        .join(
-            arrays.select(F.col("id").alias("id_b"), F.col("toks").alias("tb")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("ta", "tb")).alias("n_inter"),
-            F.size("ta").alias("n_a"),
-            F.size("tb").alias("n_b"),
-        )
+    inter = _intersect_token_sets(
+        cands, arrays, F.size("ta").alias("n_a"), F.size("tb").alias("n_b")
     )
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(

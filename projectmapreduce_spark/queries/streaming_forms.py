@@ -21,10 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projectmapreduce_spark.functions import dround, money_sum
+from projectmapreduce_spark.io import scan_stream
 from projectmapreduce_spark.queries.registry import query
 from projectmapreduce_spark.streaming import (
     dedup_within_watermark,
-    read_events_stream,
     run_available_now,
     running_user_totals,
     session_counts,
@@ -95,7 +95,7 @@ FROM events GROUP BY 1, 2
 def t1s_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 streaming form, complete-mode drain — hash-equal to the batch
     tumbling aggregate (and to DuckDB date_trunc buckets)."""
-    stream = with_watermark(read_events_stream(spark, sf_dir))
+    stream = with_watermark(scan_stream(spark, sf_dir, "events"))
     return _drain(spark, tumbling_counts(stream), "complete", _events(sf_dir))
 
 
@@ -108,7 +108,7 @@ def t1s_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t3s_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 streaming form — native session-window state, checked against
     the portable gap-and-islands SQL."""
-    stream = with_watermark(read_events_stream(spark, sf_dir))
+    stream = with_watermark(scan_stream(spark, sf_dir, "events"))
     return _drain(spark, session_counts(stream), "complete", _events(sf_dir))
 
 
@@ -130,7 +130,7 @@ def t2s_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 streaming form — overlapping 1h/15min windows maintained as
     streaming state, complete-mode drain hash-equal to the batch
     window explosion."""
-    stream = with_watermark(read_events_stream(spark, sf_dir))
+    stream = with_watermark(scan_stream(spark, sf_dir, "events"))
     return _drain(spark, sliding_counts(stream), "complete", _events(sf_dir))
 
 
@@ -139,7 +139,7 @@ def t5s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 streaming form — dropDuplicatesWithinWatermark.  Rows-only:
     which physical row survives depends on arrival order; the KEY SET
     equality is asserted in tests/test_streaming.py."""
-    stream = with_watermark(read_events_stream(spark, sf_dir), "1 day")
+    stream = with_watermark(scan_stream(spark, sf_dir, "events"), "1 day")
     out = dedup_within_watermark(stream).select("user_id", "event_type")
     return _drain(spark, out, "append", _events(sf_dir))
 
@@ -167,7 +167,7 @@ def t5b_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine for the ~7.5k key pairs here, a documented non-starter on an
     unbounded keyspace).  NULL user_id is a key value of its own on
     both engines."""
-    stream = read_events_stream(spark, sf_dir)
+    stream = scan_stream(spark, sf_dir, "events")
     out = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
@@ -195,7 +195,7 @@ def x5s_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce the drain with max/max_by instead of trusting batch count.
     This is also the correct reading of an update-mode changelog at
     any scale: last-write-wins per key."""
-    stream = read_events_stream(spark, sf_dir)
+    stream = scan_stream(spark, sf_dir, "events")
     drained = _drain(spark, running_user_totals(stream), "update", _events(sf_dir))
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -229,11 +229,11 @@ def t7s_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch interval join, so the streaming join is fully
     hash-checked; lag is exact integer microseconds (no float)."""
     views = with_watermark(
-        read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view"),
+        scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "view"),
         "6 hours",
     )
     clicks = with_watermark(
-        read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click"),
+        scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "click"),
         "6 hours",
     )
     out = stream_stream_interval_join(views, clicks, "user_id", within="6 hours").select(
@@ -269,9 +269,8 @@ def l13s_stream_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     no rand()), here rolled up per split in complete mode and
     hash-checked against the batch oracle."""
     from projectmapreduce_spark.operators.pipeline import deterministic_split
-    from projectmapreduce_spark.streaming import read_documents_stream
 
-    stream = read_documents_stream(spark, sf_dir)
+    stream = scan_stream(spark, sf_dir, "documents")
     out = (
         deterministic_split(stream, "doc_id", train_pct=80, val_pct=10)
         .groupBy("split")
@@ -307,14 +306,11 @@ def t8s_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     proof.  Files are written once per batch; a crash-replayed batch
     would rewrite exactly its own partitions."""
     from projectmapreduce_spark.operators.pipeline import deterministic_split
-    from projectmapreduce_spark.streaming import (
-        read_documents_stream,
-        sink_stream_foreach_batch,
-    )
+    from projectmapreduce_spark.streaming import sink_stream_foreach_batch
 
     name = "pmrs_" + uuid.uuid4().hex[:12]
     path = f"/tmp/pmr_stream_sink/{name}"
-    out = deterministic_split(read_documents_stream(spark, sf_dir), "doc_id")
+    out = deterministic_split(scan_stream(spark, sf_dir, "documents"), "doc_id")
     sink_stream_foreach_batch(
         out,
         path,
@@ -360,16 +356,13 @@ def t9s_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict equality against raw-scan aggregation holds at any volume.
     This is the hypertable recipe end-to-end: raw stream touched once,
     serving reads 24·|keys| partial rows per day."""
-    from projectmapreduce_spark.streaming import (
-        read_events_stream,
-        sink_stream_merge_upsert,
-    )
+    from projectmapreduce_spark.streaming import sink_stream_merge_upsert
 
     name = "pmrs_" + uuid.uuid4().hex[:12]
     path = f"/tmp/pmr_stream_sink/{name}"
     day_us = F.lit(86_400_000_000)
     hourly = (
-        read_events_stream(spark, sf_dir)
+        scan_stream(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -425,7 +418,7 @@ def t3r_session_paced_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scratch = materialize_paced_replay(spark, sf_dir, n_chunks=8)
     try:
-        stream = with_watermark(read_events_stream(spark, scratch))
+        stream = with_watermark(scan_stream(spark, scratch, "events"))
         return _drain(spark, session_counts(stream), "complete", _events(scratch))
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -475,11 +468,11 @@ def t7o_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         append_watermark_flush_file(spark, scratch)
         views = with_watermark(
-            read_events_stream(spark, scratch).filter(F.col("event_type") == "view"),
+            scan_stream(spark, scratch, "events").filter(F.col("event_type") == "view"),
             "6 hours",
         )
         clicks = with_watermark(
-            read_events_stream(spark, scratch).filter(F.col("event_type") == "click"),
+            scan_stream(spark, scratch, "events").filter(F.col("event_type") == "click"),
             "6 hours",
         )
         out = stream_stream_interval_join(
@@ -554,14 +547,14 @@ def t12_multi_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_watermark_flush_file(spark, scratch)
         views = (
             with_watermark(
-                read_events_stream(spark, scratch).filter(F.col("event_type") == "view")
+                scan_stream(spark, scratch, "events").filter(F.col("event_type") == "view")
             )
             .groupBy(F.window("ts", "1 hour"), "user_id")
             .agg(F.count(F.lit(1)).alias("n_views"))
         )
         clicks = (
             with_watermark(
-                read_events_stream(spark, scratch).filter(F.col("event_type") == "click")
+                scan_stream(spark, scratch, "events").filter(F.col("event_type") == "click")
             )
             .groupBy(F.window("ts", "1 hour"), "user_id")
             .agg(F.count(F.lit(1)).alias("n_clicks"))
@@ -650,7 +643,7 @@ def t13_agg_after_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so they never mix with real groups) drops them at the END,
         # where a filter on an aggregate output cannot be pushed past
         # the aggregation.
-        wm = with_watermark(read_events_stream(spark, scratch))
+        wm = with_watermark(scan_stream(spark, scratch, "events"))
         hourly = wm.groupBy(F.window("ts", "1 hour"), "event_type").agg(
             F.count(F.lit(1)).alias("n_hourly"),
             F.min("user_id").alias("min_uid"),
@@ -847,7 +840,7 @@ def t14_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     name of a streaming aggregation's state commit."""
     name = "pmrt14_" + uuid.uuid4().hex[:12]
     ckpt = f"/tmp/pmr_stream_ckpt/{name}"
-    stream = read_events_stream(spark, sf_dir)
+    stream = scan_stream(spark, sf_dir, "events")
     # Exact-sum discipline (module convention, cf. t12/t9s): the state
     # buffer holds a DECIMAL(20,4) running sum, not an order-dependent
     # double — the read-back equals the batch oracle at any tier.

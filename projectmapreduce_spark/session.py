@@ -49,14 +49,12 @@ from projectmapreduce_spark import cds
 
 # Runtime-settable confs every query depends on.  Session timezone is a
 # runtime conf in Spark, so we can enforce it even on a session we did
-# not build (the driver's).
+# not build (the driver's).  Only runtime confs belong here: setting a
+# static one raises CANNOT_MODIFY_STATIC_CONFIG on every query, so
+# static confs go on the get_spark builder.
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
-    # Per-DataFrame-call Python stack capture for error enrichment costs
-    # ~0.5 s on wide plan builds (profiled: _capture_call_site); the
-    # engine's own errors carry enough context.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # The fixed-width connector implements DataSourceReader.pushFilters
     # (S25); Spark 4.1 REFUSES to plan a reader that implements the
     # hook while this conf is off (DATA_SOURCE_PUSHDOWN_DISABLED), so
@@ -114,21 +112,22 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def derive_shuffle_partitions(
-    input_bytes: int,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-    min_partitions: int = 1,
-    max_partitions: int = 200_000,
-) -> int:
+# derive_shuffle_partitions: bytes per post-shuffle partition, and the
+# ceiling on the count.
+TARGET_PARTITION_BYTES = 128 * 1024 * 1024
+MAX_PARTITIONS = 200_000
+
+
+def derive_shuffle_partitions(input_bytes: int, min_partitions: int = 1) -> int:
     """Bytes-based shuffle-partition sizing — the derivation a 100 TB
     deployment uses instead of a pinned constant.
 
-    ``ceil(input_bytes / target)`` with a 128 MiB default target (the
-    same sizing rule as ``spark.sql.files.maxPartitionBytes`` applies
-    to scans): post-shuffle partitions land near the target size, so
-    tasks neither spill (too big) nor drown the scheduler in empty
-    tasks (too many).  At 100 TB / 128 MiB ≈ 800k raw partitions —
-    clamped by ``max_partitions`` because AQE coalescing works DOWN
+    ``ceil(input_bytes / TARGET_PARTITION_BYTES)`` with a 128 MiB
+    target (the same sizing rule as ``spark.sql.files.maxPartitionBytes``
+    applies to scans): post-shuffle partitions land near the target
+    size, so tasks neither spill (too big) nor drown the scheduler in
+    empty tasks (too many).  At 100 TB / 128 MiB ≈ 800k raw partitions
+    — clamped by ``MAX_PARTITIONS`` because AQE coalescing works DOWN
     from a high initial count (set
     ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` to
     this and let AQE coalesce per-stage); ``min_partitions`` floors at
@@ -144,23 +143,8 @@ def derive_shuffle_partitions(
     """
     if input_bytes < 0:
         raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
-    raw = -(-input_bytes // target_partition_bytes)  # ceil div
-    return max(min_partitions, min(max_partitions, int(raw)))
-
-
-def scan_size_bytes(spark: SparkSession, paths: list[str]) -> int:
-    """Total on-disk size of the inputs a job will shuffle — the
-    ``input_bytes`` feed for ``derive_shuffle_partitions``.  Summed
-    driver-side over the listed roots via the shared
-    ``io.hadoop_fs`` accessor (any supported filesystem scheme)."""
-    from projectmapreduce_spark.io import hadoop_fs
-
-    total = 0
-    for p in paths:
-        fs, jpath = hadoop_fs(spark, p)
-        if fs.exists(jpath):
-            total += fs.getContentSummary(jpath).getLength()
-    return total
+    raw = -(-input_bytes // TARGET_PARTITION_BYTES)  # ceil div
+    return max(min_partitions, min(MAX_PARTITIONS, int(raw)))
 
 
 def get_spark(
@@ -179,8 +163,6 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -189,6 +171,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Progress bars would fill the driver's captured stdout tail.
         .config("spark.ui.showConsoleProgress", "false")
+        # Static.  Per-DataFrame-call Python stack capture for error
+        # enrichment costs ~0.5 s on wide plan builds (profiled:
+        # _capture_call_site); the engine's own errors carry enough
+        # context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )

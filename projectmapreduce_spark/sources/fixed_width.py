@@ -877,24 +877,6 @@ def supplier_write_frame(spark, sf_dir: str):
     return sup, w
 
 
-def _dataset_files(src: str) -> list[tuple[str, os.stat_result]]:
-    """``(path relative to src, stat)`` for every data file of a
-    parquet dataset: the file itself for a single-file layout, else
-    every file in the tree, partition subdirectories included.  Entries
-    named ``.*``/``_*`` (``_SUCCESS``, ``.crc``, ``_temporary``) are
-    skipped at every level.  Raises OSError if ``src`` is missing."""
-    if not os.path.isdir(src):  # single-file layout (the testdata tiers)
-        return [(os.path.basename(src), os.stat(src))]
-    out = []
-    for root, dirs, files in os.walk(src):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for f in files:
-            if not f.startswith((".", "_")):
-                path = os.path.join(root, f)
-                out.append((os.path.relpath(path, src), os.stat(path)))
-    return out
-
-
 def supplier_fixture_files(sf_dir: str) -> int:
     """Data-sized file count for the fixed-width supplier fixture
     (round 12, guide §6 file sizing): ~8 MiB of source parquet per
@@ -904,12 +886,21 @@ def supplier_fixture_files(sf_dir: str) -> int:
     connector — while at a 100 TB scale a constant would under-split.
     Metadata only (no job): sizes the source parquet on disk.  Floor 2
     keeps the multi-file planning path (one InputPartition per file)
-    exercised on every tier."""
+    exercised on every tier.  Every data file of the source counts,
+    partition subdirectories included; entries with a ``.``/``_`` path
+    segment (``_SUCCESS``, ``.crc``, ``_temporary``) do not."""
+    from projectmapreduce_spark.io import _files_fingerprint
+
     src = os.path.join(sf_dir, "supplier.parquet")
     try:
-        n_bytes = sum(st.st_size for _, st in _dataset_files(src))
+        files = _files_fingerprint(src)
     except OSError:
         return 8
+    n_bytes = sum(
+        size
+        for rel, size, _mtime, _ino in files
+        if not any(seg.startswith((".", "_")) for seg in rel.split(os.sep))
+    )
     return int(max(2, min(64, 1 + n_bytes // (8 << 20))))
 
 
@@ -958,15 +949,15 @@ def ensure_supplier_fixed_width(
     # (ADVICE r9): (sf_dir, n_files) alone reuses a STALE fixture if
     # the parquet under sf_dir is regenerated in place, producing a
     # confusing false verification failure (engine reads old fixture,
-    # oracle reads fresh parquet).  File (name, size, mtime_ns)
-    # triples change on any rewrite without reading data bytes.
-    src = os.path.join(sf_dir, "supplier.parquet")
+    # oracle reads fresh parquet).  The io schema memo's per-file
+    # (path, size, mtime_ns, inode) entries change on any rewrite
+    # without reading data bytes.
+    from projectmapreduce_spark.io import _files_fingerprint
+
     try:
-        fingerprint = sorted(
-            (name, st.st_size, st.st_mtime_ns) for name, st in _dataset_files(src)
-        )
+        fingerprint = _files_fingerprint(os.path.join(sf_dir, "supplier.parquet"))
     except OSError:
-        fingerprint = []
+        fingerprint = ()
     key = {
         "sf_dir": os.path.abspath(sf_dir),
         "n_files": n_files,

@@ -6,7 +6,10 @@ join expression applied to a ``readStream`` DataFrame with an event-
 time watermark.  Because the transformations are identical DataFrame
 expressions, streaming output over a finite input (``availableNow``
 trigger) must equal the batch result — tests/test_streaming.py asserts
-exactly that equivalence against the driver fixtures.
+exactly that equivalence against the driver fixtures.  The streams
+themselves come from ``io.scan_stream``, the batch ``io.scan``'s twin:
+one table layout rule, one schema memo and one ``events.ts`` typing
+for both.
 
 Scale design: watermarks bound state (late rows beyond the delay are
 dropped, closed windows are evicted); `dropDuplicatesWithinWatermark`
@@ -29,108 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from projectmapreduce_spark.session import derive_shuffle_partitions, scan_size_bytes
-
-# The events fixture schema, declared explicitly: a streaming source
-# cannot infer schema.  ``ts`` storage differs across fixture
-# generations (TIMESTAMP(NANOS) vs TIMESTAMP(MICROS) — see io.scan);
-# _events_ts_storage sniffs the parquet footer (metadata only, no data
-# read) so the declared DDL matches the file and the stream surfaces
-# the same session-timezone TimestampType as the batch scan.
-EVENTS_DDL_NANOS = (
-    "event_id long, ts long, user_id long, event_type string, value double, props string"
-)
-EVENTS_DDL_MICROS = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-)
-
-
-def _events_source(sf_dir: str) -> tuple[str, str]:
-    """(base_dir, glob) for the file-source stream: the driver fixture
-    is a single ``events.parquet`` FILE inside sf_dir; Spark-written
-    tiers (sf1 synth) are an ``events.parquet/`` DIRECTORY of part
-    files.  Either way the source gets a directory + a glob."""
-    import os
-
-    p = f"{sf_dir}/events.parquet"
-    if os.path.isdir(p):
-        return p, "*.parquet"
-    return sf_dir, "events.parquet"
-
-
-def _events_ts_storage(sf_dir: str) -> str:
-    """'nanos' | 'micros' per the fixture file's parquet footer.
-
-    The PHYSICAL type decides, not pyarrow's logical view: legacy
-    INT96 timestamps (Spark's historical write default) surface in
-    pyarrow as ``timestamp[ns]`` — indistinguishable logically from
-    the driver fixtures' INT64-nanos columns — but Spark reads INT96
-    natively as TimestampType (the micros DDL path), while INT64-nanos
-    needs the nanosAsLong bigint path.  Sniffing only the logical type
-    sent INT96 files down the bigint path and failed the scan
-    (caught by the round-3 sf1 streaming sweep)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    base, pat = _events_source(sf_dir)
-    f = sorted(_glob.glob(f"{base}/{pat}"))[0]
-    md = pq.read_metadata(f)
-    idx = [md.schema.column(i).name for i in range(md.num_columns)].index("ts")
-    phys = md.schema.column(idx).physical_type
-    if phys == "INT96":
-        return "micros"  # Spark decodes INT96 straight to TimestampType
-    t = pq.read_schema(f).field("ts").type
-    return "nanos" if str(t) in ("timestamp[ns]", "int64") else "micros"
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture directory.
-
-    ``maxFilesPerTrigger=1`` keeps micro-batches bounded; with the
-    ``availableNow`` trigger the stream drains the directory and stops,
-    which is how the equivalence tests replay fixtures deterministically.
-    """
-    # The file source wants a DIRECTORY; _events_source scopes the
-    # listing with a glob whether the table is one file or a dir of
-    # part files (each part file becomes its own micro-batch).
-    base, pat = _events_source(sf_dir)
-    if _events_ts_storage(sf_dir) == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(EVENTS_DDL_NANOS)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", pat)
-            .parquet(base)
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return (
-        spark.readStream.schema(EVENTS_DDL_MICROS)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", pat)
-        .parquet(base)
-    )
-
-
-DOCUMENTS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents fixture — the ingest shape
-    of a continuously-arriving corpus (each new file = one micro-batch
-    of documents entering the training pipeline).  Handles both fixture
-    shapes like the events source: a single ``documents.parquet`` FILE
-    (driver fixtures) or a DIRECTORY of part files (sf1 synth tier)."""
-    import os
-
-    p = f"{sf_dir}/documents.parquet"
-    base, pat = (p, "*.parquet") if os.path.isdir(p) else (sf_dir, "documents.parquet")
-    return (
-        spark.readStream.schema(DOCUMENTS_DDL)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", pat)
-        .parquet(base)
-    )
+from projectmapreduce_spark.io import scan_size_bytes
+from projectmapreduce_spark.session import derive_shuffle_partitions
 
 
 def with_watermark(stream: DataFrame, delay: str = "10 minutes") -> DataFrame:
@@ -435,13 +338,16 @@ def append_watermark_flush_file(
     import time as _time
 
     ev_dir = f"{scratch_sf_dir}/events.parquet"
-    max_ts = spark.read.parquet(ev_dir).agg(F.max("ts")).collect()[0][0]
+    ev = spark.read.parquet(ev_dir)
+    max_ts = ev.agg(F.max("ts")).collect()[0][0]
+    # Rows by column name in the replay files' own schema, so the
+    # sentinel file matches the files the stream already reads.
     sent = spark.createDataFrame(
         [
-            (int(-1), max_ts, int(-1), "view", 0.0, "{}"),
-            (int(-2), max_ts, int(-2), "click", 0.0, "{}"),
+            dict(event_id=-1, ts=max_ts, user_id=-1, event_type="view", value=0.0, props="{}"),
+            dict(event_id=-2, ts=max_ts, user_id=-2, event_type="click", value=0.0, props="{}"),
         ],
-        EVENTS_DDL_MICROS,
+        ev.schema,
     ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {delta}"))
     seen = set(_glob.glob(f"{ev_dir}/*.parquet"))
     sent.coalesce(1).write.mode("append").parquet(ev_dir)
@@ -461,10 +367,11 @@ def materialize_paced_replay(
     eviction between batches differ most from a single-batch drain.
 
     Returns a scratch directory shaped like an sf_dir (contains
-    ``events.parquet/``) for ``read_events_stream``.  Chunk boundaries
-    come from approximate ts quantiles — they only shape the pacing;
-    the half-open ranges partition the rows exactly, so the UNION
-    across chunks is the full fixture regardless of boundary placement.
+    ``events.parquet/``) for ``io.scan_stream(spark, scratch,
+    "events")``.  Chunk boundaries come from approximate ts quantiles —
+    they only shape the pacing; the half-open ranges partition the rows
+    exactly, so the UNION across chunks is the full fixture regardless
+    of boundary placement.
     Time-ordering across chunks means an in-order replay loses nothing
     to the watermark, which is precisely the batch-equality contract
     the paced twin asserts."""

@@ -32,8 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from md_sections import replace_section
 from projectmapreduce_spark import session as sess
+from projectmapreduce_spark.io import scan_size_bytes
 from projectmapreduce_spark.queries import QUERIES, registry
-from projectmapreduce_spark.session import derive_shuffle_partitions, scan_size_bytes
+from projectmapreduce_spark.session import derive_shuffle_partitions
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BIG = os.path.join(REPO, ".scratch", "sf1_synth")

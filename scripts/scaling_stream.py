@@ -32,9 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from md_sections import replace_section
+from projectmapreduce_spark.io import scan_stream
 from projectmapreduce_spark.session import get_spark
 from projectmapreduce_spark.streaming import (
-    read_events_stream,
     running_user_totals,
     sink_stream_foreach_batch,
     stream_stream_interval_join,
@@ -49,10 +49,10 @@ SCRATCH = os.path.join(REPO, ".scratch", "stream_scale")
 
 def t7_join(spark, sf_dir):
     views = with_watermark(
-        read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view"), "6 hours"
+        scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "view"), "6 hours"
     )
     clicks = with_watermark(
-        read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click"), "6 hours"
+        scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "click"), "6 hours"
     )
     return stream_stream_interval_join(views, clicks, "user_id", within="6 hours").select(
         F.col("l.user_id").alias("user_id"),
@@ -141,7 +141,7 @@ def main() -> int:
         # ---- x5s: applyInPandasWithState running totals -------------
         ckpt = f"{SCRATCH}/x5_{tag}"
         sink = f"{SCRATCH}/x5_{tag}_out"
-        stream = read_events_stream(spark, sf_dir)
+        stream = scan_stream(spark, sf_dir, "events")
         n_updates, prog, wall = drain_sink(
             spark, running_user_totals(stream), ckpt, "update", sink
         )
@@ -161,7 +161,7 @@ def main() -> int:
         ckpt = f"{SCRATCH}/t8_{tag}"
         path = f"{SCRATCH}/t8_out_{tag}"
         agg = (
-            with_watermark(read_events_stream(spark, sf_dir), "1 day")
+            with_watermark(scan_stream(spark, sf_dir, "events"), "1 day")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.col("window.start").alias("win_start"), "event_type", "n")

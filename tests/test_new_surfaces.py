@@ -116,7 +116,8 @@ def test_transform_with_state_equals_batch(spark, tmp_path):
     last-write-wins reduction equals the batch aggregate."""
     import uuid
 
-    from projectmapreduce_spark.streaming import read_events_stream, run_available_now
+    from projectmapreduce_spark.io import scan_stream
+    from projectmapreduce_spark.streaming import run_available_now
     from projectmapreduce_spark.streaming.state_v2 import ROCKSDB_PROVIDER, user_profile_stream
 
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -124,7 +125,7 @@ def test_transform_with_state_equals_batch(spark, tmp_path):
     spark.conf.set(key, ROCKSDB_PROVIDER)
     try:
         name = "tws_" + uuid.uuid4().hex[:8]
-        out = user_profile_stream(read_events_stream(spark, SF_CORRECT))
+        out = user_profile_stream(scan_stream(spark, SF_CORRECT, "events"))
         run_available_now(out, str(tmp_path / name), output_mode="update", query_name=name)
         final = (
             spark.table(name)
@@ -398,13 +399,14 @@ def _sparse(path, n_bytes: int) -> None:
 
 
 def test_supplier_fixture_sizing_walks_nested_layouts(tmp_path):
-    """A partitioned supplier dataset is sized (and fingerprinted) from
-    every data file in its tree, skipping ``.``/``_`` entries at every
-    level; flat and single-file layouts size as before.  No Spark."""
+    """A partitioned supplier dataset is sized from every data file in
+    its tree, skipping ``.``/``_`` entries at every level, and
+    fingerprinted from every file; flat and single-file layouts size as
+    before.  No Spark."""
     import json
 
+    from projectmapreduce_spark.io import _files_fingerprint
     from projectmapreduce_spark.sources.fixed_width import (
-        _dataset_files,
         ensure_supplier_fixed_width,
         supplier_fixture_files,
     )
@@ -421,21 +423,14 @@ def test_supplier_fixture_sizing_walks_nested_layouts(tmp_path):
     _sparse(src / "s_nationkey=2" / "_temporary" / "part-9.parquet", 100 * mib)
     _sparse(src / ".staging" / "part-8.parquet", 100 * mib)
 
-    files = sorted(name for name, _ in _dataset_files(str(src)))
-    assert files == [
-        "s_nationkey=0/part-0.parquet",
-        "s_nationkey=1/part-1.parquet",
-        "s_nationkey=2/s_region=a/part-2.parquet",
-    ]
+    # 60 MiB of data files; any skipped 100 MiB entry would change it.
     assert supplier_fixture_files(str(nested)) == 1 + 60 // 8
 
     # The reuse marker's fingerprint covers the nested files: a marker
     # keyed on them is reused without writing (so no session is needed).
     fixture = tmp_path / "fixture"
     fixture.mkdir()
-    fingerprint = sorted(
-        [name, st.st_size, st.st_mtime_ns] for name, st in _dataset_files(str(src))
-    )
+    fingerprint = [list(entry) for entry in _files_fingerprint(str(src))]
     (fixture / "_PMR_FIXTURE.json").write_text(
         json.dumps(
             {

@@ -1026,7 +1026,8 @@ def test_global_sort_rank_tiny_and_skewed_inputs(spark):
 
 
 def test_derive_shuffle_partitions_sizing(spark):
-    from projectmapreduce_spark.session import derive_shuffle_partitions, scan_size_bytes
+    from projectmapreduce_spark.io import scan_size_bytes
+    from projectmapreduce_spark.session import derive_shuffle_partitions
 
     GiB = 1024**3
     # 1 TiB at the 128 MiB target → 8192 partitions

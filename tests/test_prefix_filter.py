@@ -3,6 +3,8 @@ inverted-index join (All-Pairs/PPJoin completeness lemma)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from projectmapreduce_spark.io import scan
@@ -26,40 +28,50 @@ def test_prefix_filter_exactly_matches_naive(spark, threshold, n):
     assert filt == naive
 
 
-def test_arrays_join_modes_output_identical(spark):
-    """The size-aware verification join (auto / forced-broadcast /
-    forced-shuffle attachment of the per-doc token arrays) must be a
-    pure physical-strategy choice — same pairs, same jaccard, in every
-    mode (round-4 fix of the unconditional broadcast).  Runs at the
-    sf0.01 correctness tier, so mode-equality plus l2b's driver
-    hash-match transitively oracle-checks the shuffle path there."""
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    """Broadcast joins off for the block, the path a corpus-sized token
+    arrays table takes; the caller's threshold is restored after it."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _pairs(df):
+    return {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()}
+
+
+def test_verify_join_strategies_output_identical(spark):
+    """How the per-doc token arrays attach to the candidate pairs
+    (broadcast probe or sort-merge join) must be a pure physical
+    choice — same pairs, same jaccard (round-4 fix of the unconditional
+    broadcast).  Runs at the sf0.01 correctness tier, so this equality
+    plus l2b's driver hash-match transitively oracle-checks the
+    sort-merge path there."""
     from tests.conftest import SF_CORRECT
 
     d = scan(spark, SF_CORRECT, "documents")
-    outs = [
-        {
-            (r.id_a, r.id_b, round(r.jaccard, 9))
-            for r in ngram_jaccard_join(
-                d, "doc_id", "text", 0.8, n=1, arrays_join=mode
-            ).collect()
-        }
-        for mode in ("auto", "broadcast", "shuffle")
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert outs[0], "fixture must produce at least one duplicate pair"
+    planned = _pairs(ngram_jaccard_join(d, "doc_id", "text", 0.8, n=1))
+    with _no_broadcast(spark):
+        merged = _pairs(ngram_jaccard_join(d, "doc_id", "text", 0.8, n=1))
+    assert planned == merged
+    assert planned, "fixture must produce at least one duplicate pair"
 
 
-def test_arrays_join_shuffle_mode_has_no_arrays_broadcast(spark):
-    """In shuffle mode the arrays table must attach via SortMergeJoin —
-    the 100 TB path where a corpus-sized broadcast would OOM the
-    driver.  (Auto mode on small fixtures may legitimately broadcast;
-    the mode knob is what makes the scale path testable.)"""
+def test_verify_join_without_broadcast_is_sort_merge(spark):
+    """With broadcasts off the arrays table attaches via SortMergeJoin —
+    the 100 TB path, where a corpus-sized broadcast would OOM the
+    driver.  (Small fixtures may legitimately broadcast by default.)"""
     from projectmapreduce_spark.plans import explain_str
 
     d = scan(spark, SF_SMOKE, "documents")
-    df = ngram_jaccard_join(d, "doc_id", "text", 0.8, n=1, arrays_join="shuffle")
-    s = explain_str(df, "simple")
-    assert "SortMergeJoin" in s, s
+    with _no_broadcast(spark):
+        s = explain_str(ngram_jaccard_join(d, "doc_id", "text", 0.8, n=1), "simple")
+    assert "SortMergeJoin" in s and "Broadcast" not in s, s
 
 
 def test_prefix_filter_handles_injected_edge_cases(spark):

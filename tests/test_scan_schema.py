@@ -120,3 +120,17 @@ def test_nanos_as_long_conf_change_is_inferred_again(spark, empty_memo, tmp_path
             spark.conf.set(NANOS, prev)
     assert types[1] == "bigint"
     assert types[0] == types[2] != "bigint"
+
+
+def test_deleted_table_is_forgotten(spark, empty_memo, tmp_path):
+    """A table deleted after its scan (a paced replay's scratch copy)
+    leaves no memo entry once another table is inferred."""
+    import shutil
+
+    for name in ("gone", "kept"):
+        (tmp_path / name).mkdir()
+        pq.write_table(pa.table({"a": [1, 2]}), tmp_path / name / "t.parquet")
+    scan(spark, str(tmp_path / "gone"), "t")
+    shutil.rmtree(tmp_path / "gone")
+    scan(spark, str(tmp_path / "kept"), "t")
+    assert list(io._SCHEMAS) == [str(tmp_path / "kept" / "t.parquet")]

@@ -70,3 +70,13 @@ def test_results_do_not_depend_on_shuffle_count(spark, name):
         assert digest(None) == digest("7")
     finally:
         spark.conf.set(SHUFFLE, before)
+
+
+def test_runtime_conf_holds_only_modifiable_keys(spark):
+    """``ensure_session_conf`` sets every ``_RUNTIME_CONF`` key on every
+    declared query; a static key there raises (and is swallowed) each
+    time instead of taking effect.  Static confs belong on the builder."""
+    from projectmapreduce_spark.session import _RUNTIME_CONF
+
+    static = [k for k in _RUNTIME_CONF if not spark.conf.isModifiable(k)]
+    assert static == []

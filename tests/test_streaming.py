@@ -10,10 +10,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from projectmapreduce_spark.io import scan
+from projectmapreduce_spark.io import scan, scan_stream
 from projectmapreduce_spark.streaming import (
     dedup_within_watermark,
-    read_events_stream,
     run_available_now,
     running_user_totals,
     session_counts,
@@ -37,7 +36,7 @@ def _rows(df, cols):
 def test_tumbling_stream_equals_batch(spark):
     # complete mode: append would hold back the last (never-closed)
     # window at end-of-stream; complete emits every window, matching batch.
-    stream = with_watermark(read_events_stream(spark, SF_SMOKE))
+    stream = with_watermark(scan_stream(spark, SF_SMOKE, "events"))
     got = _drain(spark, tumbling_counts(stream), mode="complete")
     ev = scan(spark, SF_SMOKE, "events")
     want = (
@@ -50,7 +49,7 @@ def test_tumbling_stream_equals_batch(spark):
 
 
 def test_session_stream_equals_batch(spark):
-    stream = with_watermark(read_events_stream(spark, SF_SMOKE))
+    stream = with_watermark(scan_stream(spark, SF_SMOKE, "events"))
     got = _drain(spark, session_counts(stream), mode="complete")
     ev = scan(spark, SF_SMOKE, "events")
     want = (
@@ -66,7 +65,7 @@ def test_stream_dedup_keys_match_batch(spark):
     """dropDuplicatesWithinWatermark keeps exactly one row per in-horizon
     key; over the finite fixture the surviving KEY SET must equal the
     batch distinct (which row survives is arrival-order-dependent)."""
-    stream = with_watermark(read_events_stream(spark, SF_SMOKE), "1 day")
+    stream = with_watermark(scan_stream(spark, SF_SMOKE, "events"), "1 day")
     got = _drain(spark, dedup_within_watermark(stream).select("user_id", "event_type"))
     ev = scan(spark, SF_SMOKE, "events")
     want = ev.select("user_id", "event_type").distinct()
@@ -76,7 +75,7 @@ def test_stream_dedup_keys_match_batch(spark):
 
 def test_stream_static_join_equals_batch(spark):
     cust = scan(spark, SF_SMOKE, "customer").select("c_custkey", "c_mktsegment")
-    stream = read_events_stream(spark, SF_SMOKE)
+    stream = scan_stream(spark, SF_SMOKE, "events")
     joined = stream_static_join(
         stream, cust, stream["user_id"] == cust["c_custkey"]
     ).select("event_id", "c_mktsegment")
@@ -92,7 +91,7 @@ def test_stream_static_join_equals_batch(spark):
 def test_stateful_running_totals_converge_to_batch(spark):
     """The custom applyInPandasWithState operator's final update per key
     must equal the global batch aggregate."""
-    stream = read_events_stream(spark, SF_SMOKE)
+    stream = scan_stream(spark, SF_SMOKE, "events")
     got = _drain(spark, running_user_totals(stream), mode="update")
     # One source file → one micro-batch → exactly one update per key.
     ev = scan(spark, SF_SMOKE, "events")
@@ -112,7 +111,7 @@ def test_stream_stream_interval_join_equals_batch(spark):
         c = read.filter(F.col("event_type") == "click")
         return v, c
 
-    sv, sc = sides(read_events_stream(spark, SF_SMOKE))
+    sv, sc = sides(scan_stream(spark, SF_SMOKE, "events"))
     out = stream_stream_interval_join(
         with_watermark(sv, "6 hours"), with_watermark(sc, "6 hours"), "user_id", "6 hours"
     ).select(
@@ -145,12 +144,9 @@ def test_foreach_batch_sink_refuses_empty_layout(spark):
     all prior batches) — the sink must refuse the combination."""
     import pytest
 
-    from projectmapreduce_spark.streaming import (
-        read_events_stream,
-        sink_stream_foreach_batch,
-    )
+    from projectmapreduce_spark.streaming import sink_stream_foreach_batch
 
-    stream = read_events_stream(spark, SF_SMOKE)
+    stream = scan_stream(spark, SF_SMOKE, "events")
     with pytest.raises(ValueError, match="layout column"):
         sink_stream_foreach_batch(
             stream, "/tmp/pmr_never_written", "/tmp/pmr_never_ckpt",
@@ -165,8 +161,6 @@ def test_merge_upsert_propagates_corrupt_lake_errors(spark, tmp_path):
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from projectmapreduce_spark.streaming import read_events_stream
-
     lake = tmp_path / "lake"
     part = lake / "day=2024-01-01"
     part.mkdir(parents=True)
@@ -176,7 +170,7 @@ def test_merge_upsert_propagates_corrupt_lake_errors(spark, tmp_path):
 
     from projectmapreduce_spark.streaming import sink_stream_merge_upsert
 
-    stream = read_events_stream(spark, SF_SMOKE)
+    stream = scan_stream(spark, SF_SMOKE, "events")
     agg = stream.groupBy(
         F.to_date("ts").alias("day"), F.col("user_id")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -217,7 +211,7 @@ def test_paced_replay_runs_many_microbatches(spark, tmp_path):
 
     scratch = materialize_paced_replay(spark, SF_SMOKE, n_chunks=6)
     try:
-        stream = with_watermark(read_events_stream(spark, scratch))
+        stream = with_watermark(scan_stream(spark, scratch, "events"))
         name = "paced_test_" + uuid.uuid4().hex[:8]
         run_available_now(
             session_counts(stream),
@@ -263,11 +257,11 @@ def test_left_outer_stream_join_emits_outer_tail_across_batches(spark, tmp_path)
 
     def out_for(sf_dir):
         v = with_watermark(
-            read_events_stream(spark, sf_dir).filter(F.col("event_type") == "view"),
+            scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "view"),
             "6 hours",
         )
         c = with_watermark(
-            read_events_stream(spark, sf_dir).filter(F.col("event_type") == "click"),
+            scan_stream(spark, sf_dir, "events").filter(F.col("event_type") == "click"),
             "6 hours",
         )
         return stream_stream_interval_join(
@@ -371,7 +365,7 @@ def test_t3r_checkpoint_restart_resumes(spark, tmp_path):
     name = "t3r_restart_" + uuid.uuid4().hex[:8]
 
     def start(trigger_kwargs):
-        stream = with_watermark(read_events_stream(spark, scratch))
+        stream = with_watermark(scan_stream(spark, scratch, "events"))
         return (
             session_counts(stream)
             .writeStream.format("memory")
@@ -539,7 +533,7 @@ def test_rocksdb_state_store_restart(spark, tmp_path):
     name = "rocksdb_restart_" + uuid.uuid4().hex[:8]
 
     def start(trigger_kwargs):
-        stream = with_watermark(read_events_stream(spark, scratch))
+        stream = with_watermark(scan_stream(spark, scratch, "events"))
         return (
             session_counts(stream)
             .writeStream.format("memory")
@@ -599,18 +593,14 @@ def test_t14_state_metadata_facts(spark):
     statestore source's per-partition read layout."""
     import shutil
 
-    from projectmapreduce_spark.streaming import (
-        read_events_stream,
-        run_available_now,
-        state_partitions,
-    )
+    from projectmapreduce_spark.streaming import run_available_now, state_partitions
 
     name = "pmrt14meta_" + uuid.uuid4().hex[:8]
     ckpt = f"/tmp/pmr_stream_ckpt/{name}"
     inputs = [f"{SF_SMOKE}/events.parquet"]
     try:
         agg = (
-            read_events_stream(spark, SF_SMOKE)
+            scan_stream(spark, SF_SMOKE, "events")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -660,7 +650,7 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
     before = str(expect + 1)
     spark.conf.set(key, before)
     try:
-        agg = read_events_stream(spark, SF_SMOKE).groupBy("event_type").count()
+        agg = scan_stream(spark, SF_SMOKE, "events").groupBy("event_type").count()
 
         ckpt = str(tmp_path / "ok")
         name = "sized_" + uuid.uuid4().hex[:8]
@@ -683,3 +673,60 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
         assert spark.conf.get(key) == before
     finally:
         spark.conf.set(key, saved)
+
+
+def _write_events(spark, root, storage):
+    """The smoke-tier events table stored with ``ts`` as ``storage``
+    under ``root``: a single file written by pyarrow, or (int96) a
+    Spark-written directory of part files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = f"{root}/events.parquet"
+    if storage == "int96":
+        key = "spark.sql.parquet.outputTimestampType"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "INT96")
+        try:
+            scan(spark, SF_SMOKE, "events").repartition(3).write.parquet(path)
+        finally:
+            spark.conf.set(key, prev)
+        return
+    ts_type = {
+        "nanos": pa.timestamp("ns"),
+        "micros_local": pa.timestamp("us"),
+        "micros_utc": pa.timestamp("us", tz="UTC"),
+    }[storage]
+    table = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table.column("ts").cast(ts_type))
+    pq.write_table(table, path, version="2.6", coerce_timestamps=None)
+
+
+@pytest.mark.parametrize(
+    "name,storage",
+    [
+        ("events", "nanos"),
+        ("events", "micros_local"),
+        ("events", "micros_utc"),
+        ("events", "int96"),
+        ("documents", None),
+    ],
+)
+def test_scan_stream_drain_equals_scan(spark, tmp_path, name, storage):
+    """A table drained from ``io.scan_stream`` under availableNow holds
+    the rows and dtypes ``io.scan`` reads from the same files, in every
+    way fixture generations have stored ``events.ts``."""
+    import shutil
+
+    (tmp_path / "sf").mkdir()
+    root = str(tmp_path / "sf")
+    if name == "events":
+        _write_events(spark, root, storage)
+    else:
+        shutil.copy(f"{SF_SMOKE}/{name}.parquet", root)
+    batch = scan(spark, root, name)
+    drained = _drain(spark, scan_stream(spark, root, name))
+    assert drained.dtypes == batch.dtypes
+    assert dict(batch.dtypes).get("ts", "timestamp") == "timestamp"
+    assert sorted(drained.collect(), key=repr) == sorted(batch.collect(), key=repr)

@@ -1,6 +1,9 @@
 """Deduplication operators for LLM-data pipelines (SURVEY.md §2.11).
 
-Four tiers, all pure DataFrame code (no Python in the hot path):
+Four tiers, all pure DataFrame code: no Python in the hot path, and
+no interpreted lambda per token — shingles and bucket pairs are
+built with generated-code array functions and generators
+(``plans.inspect.interpreted_expressions`` lists what is left):
 
 - ``exact_dedup``          — sha256 content hash, keep-first.
 - ``ngram_jaccard_join``   — EXACT set-overlap similarity via a token
@@ -61,9 +64,10 @@ def tokens_of(
     """(id, token) pairs — n-gram shingles of the whitespace tokens.
 
     n=1 → unigrams; n≥2 builds positional shingles JVM-side with
-    higher-order array functions (no Python).  ``distinct=False`` skips
-    the dedup shuffle — correct for consumers where duplicates are
-    absorbed anyway (minhash: min over a multiset == min over the set).
+    generated-code array functions (no Python, no interpreted lambda).
+    ``distinct=False`` skips the dedup shuffle — correct for consumers
+    where duplicates are absorbed anyway (minhash: min over a multiset
+    == min over the set).
 
     The split class is the explicit ASCII set ``[ \\t\\n\\f\\r]``
     rather than ``\\s``: Java's ``\\s`` additionally matches vertical
@@ -72,20 +76,31 @@ def tokens_of(
     input instead of relying on a no-\\x0B corpus guarantee.
     """
     arr = F.split(F.col(text_col), r"[ \t\n\f\r]+")
-    if n > 1:
-        # A doc with fewer than n tokens has ZERO n-grams (the SQL
-        # twin is `CASE WHEN len(t) >= n THEN ... ELSE [] END`).
-        # Without the guard, sequence(0, size-n) DESCENDS for short
-        # docs and slice() throws on start=0 — caught by the
-        # hostile-domain sweep's empty/whitespace documents.
-        shingles = F.transform(
-            F.sequence(F.lit(0), F.size(arr) - n),
-            lambda i: F.concat_ws(" ", F.slice(arr, i + 1, n)),
+    src = fan_out(df)
+    if n == 1:
+        out = src.select(F.col(id_col).alias("id"), F.explode(arr).alias("token"))
+    else:
+        # Shingle i is (arr[i], …, arr[i+n-1]): zip arr with its n-1
+        # left shifts and explode.  arrays_zip pads the shorter shifts
+        # with nulls, so exactly the first size-n+1 structs have a
+        # non-null last field — a doc with fewer than n tokens yields
+        # ZERO shingles (the SQL twin is `CASE WHEN len(t) >= n THEN
+        # ... ELSE [] END`) and a null text explodes to nothing.  Every
+        # step compiles under whole-stage codegen; a higher-order
+        # function here would run its lambda interpreted once per
+        # token.  The split is projected first: a generator gets no
+        # common-subexpression elimination, so inlined it would run the
+        # regex 2n-1 times per doc.
+        t = F.col("__t")
+        shifts = [t] + [F.slice(t, k + 1, F.size(t)) for k in range(1, n)]
+        zipped = F.arrays_zip(*[c.alias(f"t{k}") for k, c in enumerate(shifts)])
+        fields = [F.col("g").getField(f"t{k}") for k in range(n)]
+        out = (
+            src.select(F.col(id_col).alias("id"), arr.alias("__t"))
+            .select("id", F.explode(zipped).alias("g"))
+            .filter(fields[-1].isNotNull())
+            .select("id", F.concat_ws(" ", *fields).alias("token"))
         )
-        arr = F.when(F.size(arr) >= n, shingles).otherwise(
-            F.array().cast("array<string>")
-        )
-    out = fan_out(df).select(F.col(id_col).alias("id"), F.explode(arr).alias("token"))
     return out.distinct() if distinct else out
 
 
@@ -283,25 +298,26 @@ def minhash_lsh_candidates(
     # ONE shuffle: hash-aggregate each bucket's members, then generate
     # the C(n,2) pairs map-side from the sorted member array (replaces
     # a window-count shuffle + an equi-self-join shuffle).  Sorting the
-    # array makes id_a < id_b structural.
+    # array makes id_a < id_b structural; ``sort_array``, because
+    # ``array_sort``'s default comparator is an interpreted lambda.
     buckets = (
         band_key.groupBy("band", "bkey")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids").between(2, max_bucket))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .distinct()
+    return _sorted_pairs(buckets, "ids", "id_a", "id_b").distinct()
+
+
+def _sorted_pairs(df: DataFrame, arr_col: str, a: str, b: str) -> DataFrame:
+    """``(a, b)`` for every 2-subset of each row's sorted array column:
+    element ``pos`` pairs with every element after it, so a k-element
+    array yields exactly C(k, 2) rows with ``a < b`` when its elements
+    are distinct.  Two chained generators under whole-stage codegen:
+    no lambda is interpreted per element, and no row holds a
+    C(k, 2)-element pair array (499,500 structs at k = 1000)."""
+    arr = F.col(arr_col)
+    return df.select(arr, F.posexplode(arr).alias("__pos", a)).select(
+        a, F.explode(F.slice(arr, F.col("__pos") + 2, F.size(arr))).alias(b)
     )
 
 

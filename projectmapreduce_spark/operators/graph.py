@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from projectmapreduce_spark.operators.dedup import _sorted_pairs
+
 
 def pagerank(
     edges: DataFrame,
@@ -401,21 +403,11 @@ def cosupply_edges(li: DataFrame, cap: int = 64) -> DataFrame:
     sets_ = (
         li.join(F.broadcast(hot), "l_orderkey", "left_anti")
         .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_suppkey")).alias("ss"))
+        .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))
         .filter(F.size("ss").between(2, cap))
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     return (
-        sets_.select(F.explode(pair_structs).alias("p"))
-        .select("p.u", "p.v")
+        _sorted_pairs(sets_, "ss", "u", "v")
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -12,6 +12,7 @@ from projectmapreduce_spark.plans.inspect import (
     has_partitionless_window,
     has_pushed_filters,
     has_wholestage_codegen,
+    interpreted_expressions,
     physical_node_names,
 )
 
@@ -26,5 +27,6 @@ __all__ = [
     "has_partitionless_window",
     "has_pushed_filters",
     "has_wholestage_codegen",
+    "interpreted_expressions",
     "physical_node_names",
 ]

@@ -68,6 +68,34 @@ def physical_node_names(df: DataFrame) -> list[str]:
     return [name for name, _ in _walk_physical(root)]
 
 
+def interpreted_expressions(df: DataFrame) -> list[str]:
+    """Sorted distinct class names of the expressions in the physical
+    plan (pre-execution, subqueries included) that implement
+    ``CodegenFallback`` — the ones whole-stage codegen cannot compile
+    and evaluates interpreted, per row or, for a higher-order function
+    such as ``ArrayTransform`` with its ``LambdaFunction``, per array
+    element."""
+    jvm = df._sc._jvm  # type: ignore[attr-defined]
+    fallback = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback"
+    )
+    found: set[str] = set()
+
+    def visit(expr) -> None:
+        if fallback.isInstance(expr):
+            found.add(expr.getClass().getSimpleName())
+        children = expr.children()
+        for i in range(children.size()):
+            visit(children.apply(i))
+
+    root = df._jdf.queryExecution().executedPlan()
+    for _, node in _walk_physical(root):
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            visit(exprs.apply(i))
+    return sorted(found)
+
+
 def has_partitionless_window(df: DataFrame) -> bool:
     """True if any WindowExec / WindowGroupLimitExec has an EMPTY
     partition spec — the single-partition exchange that moves the

@@ -21,6 +21,8 @@ Design rules (SURVEY.md §1.2, §4):
 Package layout::
 
     session.py    SparkSession builder (AQE on, UTC timezone)
+    pydaemon.py   Python worker daemon (pyspark from the interpreter's
+                  install, not Spark's source-only zip)
     io.py         scans & sinks (parquet/csv/json/text, partitioned sink)
     operators/    composite operators (as-of join, theta join, dedup,
                   similarity, sessionization, topk, ...)
@@ -30,7 +32,17 @@ Package layout::
     plans/        explain/plan-inspection helpers
 """
 
-from projectmapreduce_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Loaded on first use (PEP 562): ``python -m`` on a submodule such as
+    # the worker daemon (``pydaemon``) runs this file first, and it must
+    # not import pyspark before the daemon has chosen where pyspark
+    # comes from.
+    if name == "get_spark":
+        from projectmapreduce_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -35,6 +35,25 @@ Out of reach: a session the driver builds (its JVM is already running),
 and executors.  On a cluster the same archive, dumped against the
 executors' classpath, would go through
 ``spark.executor.defaultJavaOptions``; local mode has no executor JVMs.
+
+Python workers.  Spark starts each Python worker daemon with
+``$SPARK_HOME/python/lib``'s ``pyspark.zip`` (source only, no bytecode)
+and py4j zip and the ``spark-core`` jar first on its path, so every
+daemon compiles pyspark from source and every task re-reads those
+archives' directories.  ``get_spark`` sets ``spark.python.daemon.module``
+to ``pydaemon``, which drops those entries before importing pyspark when
+the interpreter's own pyspark is the same release (its
+``pyspark/version.py`` is byte-identical to the zip's) and py4j imports
+without the zip; otherwise it leaves the path exactly as Spark built it.
+Either way the workers are ``pyspark.daemon``'s.  It also sets
+``spark.executorEnv.PYTHONPATH`` to this package's parent directory, so
+workers import the daemon and the package (Python DataSources, UDFs
+defined in it) from any working directory.  Out of reach: Spark's
+``PythonPlannerRunner`` (DataSource create and plan-read, UDTF analyze,
+write commit) always starts the built-in ``pyspark.daemon``, so those
+calls keep the zip's cost; a session the driver builds keeps Spark's
+daemon; and executors on a cluster would need the package shipped in
+``spark.submit.pyFiles``.
 """
 
 from __future__ import annotations
@@ -177,6 +196,14 @@ def get_spark(
         # context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # Python workers (module docstring): the package's parent on
+        # their path, and a daemon that imports pyspark from the
+        # interpreter's install.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+        .config("spark.python.daemon.module", "projectmapreduce_spark.pydaemon")
     )
     # Parallel-process isolation: when $SPARK_GRAFT_SCRATCH redirects
     # io.scratch_path, redirect the managed-table warehouse with it —

@@ -110,14 +110,13 @@ def ngram_jaccard_join(
     text_col: str,
     threshold: float,
     n: int = 1,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard similarity join.  Output: (id_a, id_b, jaccard)
     with id_a < id_b and jaccard ≥ threshold.
 
-    ``prefix_filter=True`` (default) applies the All-Pairs/PPJoin
-    prefix-filtering principle [Bayardo et al. WWW'07; Xiao et al.
-    WWW'08 — public algorithms]: order tokens globally rarest-first;
+    Candidates come from the All-Pairs/PPJoin prefix-filtering
+    principle [Bayardo et al. WWW'07; Xiao et al. WWW'08 — public
+    algorithms]: order tokens globally rarest-first;
     a doc of size s only indexes its first ``s − ⌈t·s⌉ + 1`` tokens.
     Any pair with J ≥ t must share an indexed token (if A∩B misses A's
     prefix, the whole intersection fits in A's suffix of ⌈t·s⌉−1 <
@@ -129,60 +128,47 @@ def ngram_jaccard_join(
     sf0.1 fixture the wall time is dominated by its ~3M genuinely
     similar output pairs — an output-bound cost no exact algorithm
     avoids; the filter's win is the hot-token asymptotics, verified
-    output-identical to the naive join in tests.)
-
-    ``prefix_filter=False`` is the naive inverted-index join kept for
-    differential testing; its verification is a token-join count.
+    output-identical to the naive join in tests/test_prefix_filter.py.)
     """
     tok = tokens_of(df, id_col, text_col, n)
     sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
-    if prefix_filter:
-        freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("tf"))
-        ranked = (
-            tok.join(freq, "token")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.col("tf").asc(), F.col("token").asc())
-                ),
-            )
-            .join(sizes, "id")
+    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("tf"))
+    ranked = (
+        tok.join(freq, "token")
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("id").orderBy(F.col("tf").asc(), F.col("token").asc())
+            ),
         )
-        plen = F.col("n_tok") - F.ceil(F.lit(threshold) * F.col("n_tok")) + 1
-        pref = ranked.filter(F.col("rnk") <= plen).select("id", "token", "n_tok")
-        pa = pref.select(F.col("id").alias("id_a"), "token", F.col("n_tok").alias("n_a"))
-        pb = pref.select(F.col("id").alias("id_b"), "token", F.col("n_tok").alias("n_b"))
-        # LENGTH filter (standard PPJoin companion, exactness-preserving):
-        # J ≥ t forces t·|A| ≤ |B| ≤ |A|/t, so size-incompatible pairs
-        # die inside the prefix join before they ever materialize.
-        cands = (
-            pa.join(pb, on="token")
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.col("n_b") >= F.ceil(F.lit(threshold) * F.col("n_a")))
-                & (F.col("n_a") >= F.ceil(F.lit(threshold) * F.col("n_b")))
-            )
-            .select("id_a", "id_b")
-            .distinct()
+        .join(sizes, "id")
+    )
+    plen = F.col("n_tok") - F.ceil(F.lit(threshold) * F.col("n_tok")) + 1
+    pref = ranked.filter(F.col("rnk") <= plen).select("id", "token", "n_tok")
+    pa = pref.select(F.col("id").alias("id_a"), "token", F.col("n_tok").alias("n_a"))
+    pb = pref.select(F.col("id").alias("id_b"), "token", F.col("n_tok").alias("n_b"))
+    # LENGTH filter (standard PPJoin companion, exactness-preserving):
+    # J ≥ t forces t·|A| ≤ |B| ≤ |A|/t, so size-incompatible pairs
+    # die inside the prefix join before they ever materialize.
+    cands = (
+        pa.join(pb, on="token")
+        .filter(
+            (F.col("id_a") < F.col("id_b"))
+            & (F.col("n_b") >= F.ceil(F.lit(threshold) * F.col("n_a")))
+            & (F.col("n_a") >= F.ceil(F.lit(threshold) * F.col("n_b")))
         )
-        # Verification is ARRAY-based, not an exploded token join: the
-        # first cut joined candidates back to (id, token) rows, which
-        # shuffles |cands| × doc_len rows — at sf1 (50k docs, t=0.8)
-        # that was ~5e9 rows and 100+ GB of spill (observed disk-full).
-        # Each pair now intersects two per-doc token arrays instead.
-        arrays = tok.groupBy("id").agg(
-            F.sort_array(F.collect_list("token")).alias("toks")
-        )
-        inter = _intersect_token_sets(cands, arrays)
-    else:
-        a = tok.select(F.col("id").alias("id_a"), "token")
-        b = tok.select(F.col("id").alias("id_b"), "token")
-        inter = (
-            a.join(b, on="token")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    # Verification is ARRAY-based, not an exploded token join: the
+    # first cut joined candidates back to (id, token) rows, which
+    # shuffles |cands| × doc_len rows — at sf1 (50k docs, t=0.8)
+    # that was ~5e9 rows and 100+ GB of spill (observed disk-full).
+    # Each pair now intersects two per-doc token arrays instead.
+    arrays = tok.groupBy("id").agg(
+        F.sort_array(F.collect_list("token")).alias("toks")
+    )
+    inter = _intersect_token_sets(cands, arrays)
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_tok").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_tok").alias("n_b"))
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))

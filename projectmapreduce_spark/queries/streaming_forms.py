@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projectmapreduce_spark.functions import dround, money_sum
-from projectmapreduce_spark.io import scan_stream
+from projectmapreduce_spark.io import scan_stream, scratch_path
 from projectmapreduce_spark.queries.registry import query
 from projectmapreduce_spark.streaming import (
     dedup_within_watermark,
@@ -66,7 +66,7 @@ def _drain(
     name = "pmrs_" + uuid.uuid4().hex[:12]
     run_available_now(
         out,
-        f"/tmp/pmr_stream_ckpt/{name}",
+        scratch_path(f"pmr_stream_ckpt/{name}"),
         output_mode=mode,
         query_name=name,
         input_paths=input_paths,
@@ -309,12 +309,12 @@ def t8s_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projectmapreduce_spark.streaming import sink_stream_foreach_batch
 
     name = "pmrs_" + uuid.uuid4().hex[:12]
-    path = f"/tmp/pmr_stream_sink/{name}"
+    path = scratch_path(f"pmr_stream_sink/{name}")
     out = deterministic_split(scan_stream(spark, sf_dir, "documents"), "doc_id")
     sink_stream_foreach_batch(
         out,
         path,
-        f"/tmp/pmr_stream_ckpt/{name}",
+        scratch_path(f"pmr_stream_ckpt/{name}"),
         partition_cols=["split"],
         input_paths=_documents(sf_dir),
     )
@@ -359,7 +359,7 @@ def t9s_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from projectmapreduce_spark.streaming import sink_stream_merge_upsert
 
     name = "pmrs_" + uuid.uuid4().hex[:12]
-    path = f"/tmp/pmr_stream_sink/{name}"
+    path = scratch_path(f"pmr_stream_sink/{name}")
     day_us = F.lit(86_400_000_000)
     hourly = (
         scan_stream(spark, sf_dir, "events")
@@ -379,7 +379,7 @@ def t9s_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink_stream_merge_upsert(
         hourly,
         path,
-        f"/tmp/pmr_stream_ckpt/{name}",
+        scratch_path(f"pmr_stream_ckpt/{name}"),
         keys=["hour_us", "event_type"],
         partition_col="day_us",
         input_paths=_events(sf_dir),
@@ -705,7 +705,6 @@ def s24_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregates: the files the stream committed — not the in-memory
     stream — must hash-match the batch aggregate over the ORIGINAL
     supplier table."""
-    from projectmapreduce_spark.io import scratch_path
     from projectmapreduce_spark.sources.fixed_width import (
         SUPPLIER_DDL,
         register,
@@ -779,7 +778,6 @@ def s21_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (filesPerTrigger) needs a processing-time trigger to advance —
     the incremental multi-batch path is asserted there, batch-by-batch.
     """
-    from projectmapreduce_spark.io import scratch_path
     from projectmapreduce_spark.sources.fixed_width import (
         SUPPLIER_DDL,
         register,
@@ -839,7 +837,7 @@ def t14_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the state-metadata source, pinning the documented operator
     name of a streaming aggregation's state commit."""
     name = "pmrt14_" + uuid.uuid4().hex[:12]
-    ckpt = f"/tmp/pmr_stream_ckpt/{name}"
+    ckpt = scratch_path(f"pmr_stream_ckpt/{name}")
     stream = scan_stream(spark, sf_dir, "events")
     # Exact-sum discipline (module convention, cf. t12/t9s): the state
     # buffer holds a DECIMAL(20,4) running sum, not an order-dependent

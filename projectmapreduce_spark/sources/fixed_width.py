@@ -21,18 +21,19 @@ the LINE framing.
 Scale notes: each partition reads one ALIGNED byte range (a whole
 small file, or a record-range slice of a large one — fixed record
 width makes offsets exact) and decodes it with numpy kernels into a
-``pyarrow.RecordBatch``; the write side is the symmetric vectorized
-encoder.  The planner ships only (path, spec, range) per partition.
+``pyarrow.RecordBatch``; the write side is the symmetric numpy
+encoder.  Each direction has this one path; the scalar
+``encode_*``/``decode_*`` codecs below define the format, and the
+tests hold the kernels to them.  The planner ships only (path, spec, range) per partition.
 All four connector quadrants are implemented: batch read
 (``FixedWidthReader``), streaming read (``FixedWidthStreamReader``),
 batch write (``FixedWidthWriter`` — staged-rename commit, so failed
 jobs never publish partial data), streaming write
 (``FixedWidthStreamWriter`` — per-batch deterministic names,
 idempotent under micro-batch replay).
-Column pruning/pushdown are not implemented — a fixed-width record
-must be sliced whole anyway, and filters stay in the Spark plan where
-codegen runs them (the API's ``pushFilters`` hook is the extension
-point if a field-level skip index existed).
+Column pruning is not implemented — a fixed-width record must be
+sliced whole anyway.  Filters Spark pushes (``pushFilters``) are
+applied as one Arrow mask over each decoded batch.
 """
 
 from __future__ import annotations
@@ -149,18 +150,14 @@ class _FilePartition(InputPartition):
 
 
 class FixedWidthReader(DataSourceReader):
-    """Batch reader.  Two decode paths over the same byte ranges:
-
-    - **vectorized** (default): each partition reads its aligned byte
-      range in one ``read()``, reshapes it as an (n_records, width)
-      uint8 matrix, and decodes every field with numpy kernels —
-      hex-nibble arithmetic for int64/float64 bit patterns, one
-      masked-flatten for strings — yielding ``pyarrow.RecordBatch``
-      directly (the Spark 4 DataSource API's Arrow fast path, same
-      idiom as the x6 mapInArrow surface).  No per-row Python runs.
-    - **rowwise** (``vectorized=false``): the didactic per-line
-      decoder the format docs describe, kept as the reference
-      implementation the vectorized path is tested against.
+    """Batch reader.  Each partition reads its aligned byte range in
+    one ``read()``, reshapes it as an (n_records, width) uint8 matrix,
+    and decodes every field with numpy kernels — hex-nibble arithmetic
+    for int64/float64 bit patterns, one masked-flatten for strings —
+    yielding ``pyarrow.RecordBatch`` directly (the Spark 4 DataSource
+    API's Arrow fast path, same idiom as the x6 mapInArrow surface).
+    No per-row Python runs; pushed filters drop rows with one Arrow
+    mask before the batch crosses into the JVM.
 
     Files LARGER than ``splitSizeBytes`` are split into aligned
     record-range partitions (record width is fixed — offsets are
@@ -172,7 +169,6 @@ class FixedWidthReader(DataSourceReader):
         self.path = options["path"]
         self.spec = _parse_spec(options, schema)
         self.names = [f.name for f in schema.fields]
-        self.vectorized = options.get("vectorized", "true").lower() == "true"
         self.split_bytes = int(options.get("splitSizeBytes", str(32 << 20)))
         self.record_width = sum(w for _, w in self.spec)
         self.span = self.record_width + 1  # + newline
@@ -266,43 +262,6 @@ class FixedWidthReader(DataSourceReader):
             mask = m if mask is None else pc.and_kleene(mask, m)
         return mask
 
-    def _row_predicate(self):
-        """The rowwise twin of _filter_mask (reference decode path)."""
-
-        def _one(f, v):
-            if isinstance(f, IsNull):
-                return v is None
-            if isinstance(f, IsNotNull):
-                return v is not None
-            if isinstance(f, EqualNullSafe):
-                return v == f.value if f.value is not None else v is None
-            if v is None:
-                return False
-            if isinstance(f, EqualTo):
-                return v == f.value
-            if isinstance(f, GreaterThan):
-                return v > f.value
-            if isinstance(f, GreaterThanOrEqual):
-                return v >= f.value
-            if isinstance(f, LessThan):
-                return v < f.value
-            if isinstance(f, LessThanOrEqual):
-                return v <= f.value
-            if isinstance(f, StringStartsWith):
-                return v.startswith(f.value)
-            if isinstance(f, StringEndsWith):
-                return v.endswith(f.value)
-            if isinstance(f, StringContains):
-                return f.value in v
-            return v in set(f.value)  # In
-
-        idx = {n: i for i, n in enumerate(self.names)}
-
-        def pred(row: tuple) -> bool:
-            return all(_one(f, row[idx[f.attribute[0]]]) for f in self.pushed)
-
-        return pred
-
     def list_files(self) -> list[str]:
         return [
             os.path.join(self.path, f)
@@ -356,29 +315,10 @@ class FixedWidthReader(DataSourceReader):
         blob, n = self._read_range(partition)
         if n == 0:
             return
-        if self.vectorized:
-            batch = _decode_batch_arrow(blob, n, self.span, self.spec, self.names)
-            if self.pushed:
-                batch = batch.filter(self._filter_mask(batch))
-            yield batch
-            return
-        pred = self._row_predicate() if self.pushed else None
-        decoders = []
-        off = 0
-        for t, w in self.spec:
-            lo, hi = off, off + w
-            if t in ("bigint", "long"):
-                decoders.append(lambda ln, lo=lo, hi=hi: decode_long(ln[lo:hi]))
-            elif t == "double":
-                decoders.append(lambda ln, lo=lo, hi=hi: decode_double(ln[lo:hi]))
-            else:
-                decoders.append(lambda ln, lo=lo, hi=hi: decode_string(ln[lo:hi]))
-            off = hi
-        for i in range(n):
-            line = blob[i * self.span : (i + 1) * self.span - 1].decode("ascii")
-            row = tuple(d(line) for d in decoders)
-            if pred is None or pred(row):
-                yield row
+        batch = _decode_batch_arrow(blob, n, self.span, self.spec, self.names)
+        if self.pushed:
+            batch = batch.filter(self._filter_mask(batch))
+        yield batch
 
 
 def _hex_nibbles(mat):
@@ -412,7 +352,7 @@ def _decode_batch_arrow(blob: bytes, n: int, span: int, spec, names):
 
     mat = np.frombuffer(blob, dtype=np.uint8).reshape(n, span)
     # Framing + alphabet validation (ADVICE r7 items 1 and 4), both
-    # vectorized one-pass LUT lookups so the fast path stays fast:
+    # vectorized one-pass LUT lookups so the decode stays fast:
     # every record must end in '\n', and every data byte must be
     # lowercase hex, the ' ' string pad, or the 'Z' null fill —
     # anything else (uppercase hex from a hand-edited file, corrupt
@@ -558,7 +498,7 @@ def _string_to_hex_matrix(col, w: int):
 def _encode_matrix(b, spec: list[tuple[str, int]]):
     """One Arrow RecordBatch → the (n, record_width) uint8 ASCII matrix
     of its fixed-width encoding (no newlines), fully numpy-vectorized —
-    the shared kernel under ``encode_batch_arrow`` (mapInArrow write
+    the shared kernel under ``encode_lines_fn`` (mapInArrow write
     path) and the DataSource writers (which append the newline column
     and write bytes straight to the staged file)."""
     import numpy as np
@@ -580,60 +520,29 @@ def _encode_matrix(b, spec: list[tuple[str, int]]):
     return np.hstack(mats) if mats else np.empty((n, 0), dtype=np.uint8)
 
 
-def encode_batch_arrow(b, spec: list[tuple[str, int]]):
-    """One Arrow RecordBatch → one single-column ('value') RecordBatch
-    of fixed-width lines, fully numpy-vectorized (the write-side twin
-    of _decode_batch_arrow; the reader's test suite pins the two paths
-    against each other and against the scalar codecs)."""
-    import numpy as np
-    import pyarrow as pa
-
-    n = b.num_rows
-    matrix = _encode_matrix(b, spec)
-    width = matrix.shape[1]
-    offsets = (np.arange(n + 1, dtype=np.int32) * width).tobytes()
-    lines = pa.StringArray.from_buffers(
-        n, pa.py_buffer(offsets), pa.py_buffer(matrix.tobytes()), None, 0
-    )
-    return pa.RecordBatch.from_arrays([lines], names=["value"])
-
-
-def encode_lines_fn(spec: list[tuple[str, int]], vectorized: bool = True):
+def encode_lines_fn(spec: list[tuple[str, int]]):
     """Build a ``mapInArrow`` kernel turning rows into fixed-width lines
-    (the WRITE side, used by the declared round-trip query and tests).
-    Arrow, not pandas, deliberately: a pandas float64 column renders
-    BOTH null and NaN as NaN, which would conflate a missing balance
-    with a NaN balance — Arrow arrays preserve None vs float('nan').
-    ``spec`` mirrors the reader: (type, hex_width_for_strings).
-
-    Default path is the numpy-vectorized encoder (no per-row Python);
-    ``vectorized=False`` keeps the scalar-codec reference loop the
-    vectorized kernel is tested against."""
-    import pyarrow as pa
-
-    if vectorized:
-
-        def fn(batches):
-            for b in batches:
-                yield encode_batch_arrow(b, spec)
-
-        return fn
+    (the WRITE side, used by the declared round-trip query and tests):
+    each Arrow RecordBatch becomes one single-column ('value')
+    RecordBatch of lines encoded by ``_encode_matrix``, with no per-row
+    Python.  Arrow, not pandas, deliberately: a pandas float64 column
+    renders BOTH null and NaN as NaN, which would conflate a missing
+    balance with a NaN balance — Arrow arrays preserve None vs
+    float('nan').  ``spec`` mirrors the reader: (type,
+    hex_width_for_strings)."""
 
     def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
         for b in batches:
-            cols = [c.to_pylist() for c in b.columns]
-            lines = []
-            for vals in zip(*cols):
-                parts = []
-                for (t, w), v in zip(spec, vals):
-                    if t in ("bigint", "long"):
-                        parts.append(encode_long(v))
-                    elif t == "double":
-                        parts.append(encode_double(v))
-                    else:
-                        parts.append(encode_string(v, w))
-                lines.append("".join(parts))
-            yield pa.RecordBatch.from_arrays([pa.array(lines, pa.string())], names=["value"])
+            matrix = _encode_matrix(b, spec)
+            n, width = matrix.shape
+            offsets = (np.arange(n + 1, dtype=np.int32) * width).tobytes()
+            lines = pa.StringArray.from_buffers(
+                n, pa.py_buffer(offsets), pa.py_buffer(matrix.tobytes()), None, 0
+            )
+            yield pa.RecordBatch.from_arrays([lines], names=["value"])
 
     return fn
 
@@ -657,14 +566,11 @@ class FixedWidthStreamReader(DataSourceStreamReader):
         self._batch = FixedWidthReader(options, schema)
         self._per_trigger = int(options.get("filesPerTrigger", "0"))
 
-    def _files(self) -> list[str]:
-        return [p.path for p in self._batch.partitions()]
-
     def initialOffset(self) -> dict:
         return {"n_files": 0}
 
     def latestOffset(self) -> dict:
-        n = len(self._files())
+        n = len(self._batch.list_files())
         if self._per_trigger > 0:
             cur = getattr(self, "_exposed", 0)
             n = min(cur + self._per_trigger, n)
@@ -691,12 +597,12 @@ class FixedWidthStreamReader(DataSourceStreamReader):
         # tests/test_streaming.py::test_s21_checkpoint_restart_resumes.
         self._floor = max(getattr(self, "_floor", 0), start["n_files"])
         self._exposed = max(getattr(self, "_exposed", 0), start["n_files"])
-        files = self._files()
+        files = self._batch.list_files()
         lo = max(start["n_files"], self._floor)
         hi = end["n_files"]
         return [_FilePartition(p) for p in files[lo:hi]]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator:
         return self._batch.read(partition)
 
     def commit(self, end: dict) -> None:

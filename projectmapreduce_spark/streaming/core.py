@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from projectmapreduce_spark.io import scan_size_bytes
+from projectmapreduce_spark.io import scan_size_bytes, scratch_path
 from projectmapreduce_spark.session import derive_shuffle_partitions
 
 
@@ -134,6 +134,7 @@ def stream_stream_interval_join(
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_ADAPTIVE = "spark.sql.adaptive.enabled"
 
 
 def run_available_now(
@@ -159,10 +160,17 @@ def run_available_now(
     value is put back after it, also when the query fails.  A restart
     over an existing checkpoint keeps the count recorded in it (Spark
     restores it from the offset log), whatever is set here.
+
+    ``spark.sql.adaptive.enabled`` is scoped off for the drain the same
+    way: streaming plans never run adaptively, and with it on Spark
+    logs a ``ResolveWriteToStream`` warning on every drain.  (Spark
+    4.1 logs ``MicroBatchExecution: Disabling AQE`` for every stateful
+    plan whatever the conf says.)
     """
     spark = out.sparkSession
-    prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+    prev = {k: spark.conf.get(k) for k in (_SHUFFLE_PARTITIONS, _ADAPTIVE)}
     spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions(spark, input_paths)))
+    spark.conf.set(_ADAPTIVE, "false")
     try:
         writer = (
             out.writeStream.queryName(query_name)
@@ -172,7 +180,8 @@ def run_available_now(
         writer = sink(writer) if sink else writer.format("memory")
         writer.trigger(availableNow=True).start().awaitTermination()
     finally:
-        spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def state_partitions(spark: SparkSession, input_paths: Sequence[str]) -> int:
@@ -382,7 +391,7 @@ def materialize_paced_replay(
 
     from projectmapreduce_spark.io import scan
 
-    scratch = f"/tmp/pmr_paced/{_uuid.uuid4().hex[:12]}"
+    scratch = scratch_path(f"pmr_paced/{_uuid.uuid4().hex[:12]}")
     ev_dir = f"{scratch}/events.parquet"
     os.makedirs(ev_dir, exist_ok=True)
     ev = scan(spark, sf_dir, "events")

@@ -583,38 +583,32 @@ def _hostile_fixed_width_dir(spark, path):
     return rows, w
 
 
-def test_fixed_width_vectorized_equals_rowwise(spark, tmp_path):
-    """The vectorized Arrow decode path must agree with the rowwise
-    reference decoder ROW-FOR-ROW on the hostile value classes —
-    NULL/NaN/-0.0/±inf/denormals/extreme int64/unicode/newlines —
-    and both must reproduce the source rows exactly."""
+def test_fixed_width_read_equals_source_rows(spark, tmp_path):
+    """The Arrow decode path must reproduce the source rows exactly,
+    ROW-FOR-ROW, on the hostile value classes — NULL/NaN/-0.0/±inf/
+    denormals/extreme int64/unicode/newlines."""
     from projectmapreduce_spark.sources.fixed_width import register
 
     register(spark)
     path = str(tmp_path / "fw_hostile")
     rows, w = _hostile_fixed_width_dir(spark, path)
 
-    def rd(vectorized):
-        return (
-            spark.read.format("pmr_fixedwidth")
-            .option("path", path)
-            .option("spec", f"long,string:{w},long,double")
-            .option("ddl", "k bigint, s string, v bigint, d double")
-            .option("vectorized", str(vectorized).lower())
-            .load()
-        )
-
-    vec = sorted((_canon_row(tuple(r)) for r in rd(True).collect()), key=repr)
-    row = sorted((_canon_row(tuple(r)) for r in rd(False).collect()), key=repr)
+    got = (
+        spark.read.format("pmr_fixedwidth")
+        .option("path", path)
+        .option("spec", f"long,string:{w},long,double")
+        .option("ddl", "k bigint, s string, v bigint, d double")
+        .load()
+    )
     want = sorted((_canon_row(r) for r in rows), key=repr)
-    assert vec == row == want
+    assert sorted((_canon_row(tuple(r)) for r in got.collect()), key=repr) == want
 
 
 def test_fixed_width_byte_range_splits(spark, tmp_path):
     """Files larger than splitSizeBytes must scan as MULTIPLE aligned
     record-range partitions (one huge export file no longer reads
     1-wide), with rows identical to the unsplit read — including a
-    split boundary that lands mid-file on both decode paths."""
+    split boundary that lands mid-file."""
     import pyspark.sql.types as T
 
     from projectmapreduce_spark.sources.fixed_width import FixedWidthReader, register
@@ -650,17 +644,48 @@ def test_fixed_width_byte_range_splits(spark, tmp_path):
         assert pos == total  # ranges cover the whole file
 
     want = sorted((_canon_row(r) for r in rows), key=repr)
-    for vectorized in ("true", "false"):
-        got = (
-            spark.read.format("pmr_fixedwidth")
-            .option("path", path)
-            .option("spec", spec)
-            .option("ddl", ddl)
-            .option("vectorized", vectorized)
-            .option("splitSizeBytes", str(2 * span))
-            .load()
-        )
-        assert sorted((_canon_row(tuple(r)) for r in got.collect()), key=repr) == want
+    got = (
+        spark.read.format("pmr_fixedwidth")
+        .option("path", path)
+        .option("spec", spec)
+        .option("ddl", ddl)
+        .option("splitSizeBytes", str(2 * span))
+        .load()
+    )
+    assert sorted((_canon_row(tuple(r)) for r in got.collect()), key=repr) == want
+
+
+def test_fixed_width_stream_reads_split_files_once(spark, tmp_path):
+    """The stream's offsets count FILES, so a file larger than
+    splitSizeBytes (several batch partitions) must still stream once:
+    drained with availableNow, the stream equals the batch read row
+    for row."""
+    import uuid
+
+    from projectmapreduce_spark.sources.fixed_width import register
+    from projectmapreduce_spark.streaming import run_available_now
+
+    register(spark)
+    path = str(tmp_path / "fw_split_stream")
+    rows, w = _hostile_fixed_width_dir(spark, path)
+    span = 16 + w + 16 + 16 + 1
+    options = {
+        "path": path,
+        "spec": f"long,string:{w},long,double",
+        "ddl": "k bigint, s string, v bigint, d double",
+        "splitSizeBytes": str(2 * span),  # any file of >2 records splits
+    }
+    batch = spark.read.format("pmr_fixedwidth").options(**options).load()
+    stream = spark.readStream.format("pmr_fixedwidth").options(**options).load()
+    name = "fw_split_" + uuid.uuid4().hex[:8]
+    run_available_now(stream, str(tmp_path / "ckpt"), query_name=name)
+
+    def canon(df):
+        return sorted((_canon_row(tuple(r)) for r in df.collect()), key=repr)
+
+    want = canon(batch)
+    assert len(want) == len(rows)
+    assert canon(spark.table(name)) == want
 
 
 def test_w10_pattern_on_constructed_series(spark, tmp_path):
@@ -815,10 +840,16 @@ def test_l35_split_matches_independent_reimplementation(spark):
 
 def test_fixed_width_writer_vectorized_equals_rowwise(spark):
     """The numpy-vectorized encoder must produce BYTE-IDENTICAL lines
-    to the scalar-codec reference loop on the hostile value classes."""
+    to lines joined from the scalar codecs on the hostile value
+    classes."""
     import pyarrow as pa
 
-    from projectmapreduce_spark.sources.fixed_width import encode_lines_fn
+    from projectmapreduce_spark.sources.fixed_width import (
+        encode_double,
+        encode_lines_fn,
+        encode_long,
+        encode_string,
+    )
 
     rows = [
         (1, "plain", 10, 1.5),
@@ -840,16 +871,19 @@ def test_fixed_width_writer_vectorized_equals_rowwise(spark):
         ],
         names=["k", "s", "v", "d"],
     )
-    vec = list(encode_lines_fn(spec, vectorized=True)([batch]))[0]
-    row = list(encode_lines_fn(spec, vectorized=False)([batch]))[0]
-    assert vec.column(0).to_pylist() == row.column(0).to_pylist()
+    (out,) = list(encode_lines_fn(spec)([batch]))
+    want = [
+        encode_long(k) + encode_string(s, w) + encode_long(v) + encode_double(d)
+        for k, s, v, d in rows
+    ]
+    assert out.column(0).to_pylist() == want
 
     # overflow must still raise, not truncate
     import pytest as _pytest
 
     tiny = [("long", 0), ("string", 4), ("long", 0), ("double", 0)]
     with _pytest.raises(Exception, match="overflows"):
-        list(encode_lines_fn(tiny, vectorized=True)([batch]))
+        list(encode_lines_fn(tiny)([batch]))
 
 
 def test_w11_funnel_ordering_and_window(spark, tmp_path):
@@ -1148,10 +1182,10 @@ def test_fixed_width_rejects_corrupt_input(spark, tmp_path):
 def test_pushdown_removes_filter_node_and_stays_correct(spark, tmp_path):
     """S25 plan proof: when every conjunct is accepted by pushFilters,
     Catalyst REMOVES the Filter node above the Python scan — so
-    correctness rests entirely on the source's mask.  Both decode
-    paths (vectorized Arrow mask, rowwise predicate) must agree with
-    the unpushed baseline row-for-row, including NULL semantics
-    (comparison with NULL drops the row; IsNull keeps it)."""
+    correctness rests entirely on the source's Arrow mask, which must
+    agree with Spark's own filter over the source rows row-for-row,
+    including NULL semantics (comparison with NULL drops the row;
+    IsNull keeps it)."""
     from pyspark.sql import types as T
 
     from projectmapreduce_spark.sources.fixed_width import register
@@ -1184,12 +1218,11 @@ def test_pushdown_removes_filter_node_and_stays_correct(spark, tmp_path):
         .save()
     )
 
-    def load(vectorized=True):
+    def load():
         return (
             spark.read.format("pmr_fixedwidth")
             .option("path", path)
             .option("spec", spec)
-            .option("vectorized", str(vectorized).lower())
             .option("ddl", "k bigint, s string, v bigint, d double")
             .load()
         )
@@ -1199,7 +1232,7 @@ def test_pushdown_removes_filter_node_and_stays_correct(spark, tmp_path):
         & (F.col("v") >= 10)
         & F.col("d").isNotNull()
     )
-    pushed = load(True).filter(cond)
+    pushed = load().filter(cond)
     plan = pushed._jdf.queryExecution().executedPlan().toString()
     import re
 
@@ -1208,9 +1241,8 @@ def test_pushdown_removes_filter_node_and_stays_correct(spark, tmp_path):
     )
     expect = sorted(tuple(r) for r in df.filter(cond).collect())
     assert sorted(tuple(r) for r in pushed.collect()) == expect
-    assert sorted(tuple(r) for r in load(False).filter(cond).collect()) == expect
     # IsNull pushdown keeps exactly the null rows
-    assert [r["k"] for r in load(True).filter(F.col("v").isNull()).collect()] == [3]
+    assert [r["k"] for r in load().filter(F.col("v").isNull()).collect()] == [3]
 
 
 def test_pushdown_yields_unsupported_filters_back(spark, tmp_path):

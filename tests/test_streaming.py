@@ -10,7 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from projectmapreduce_spark.io import scan, scan_stream
+from projectmapreduce_spark.io import scan, scan_stream, scratch_path
 from projectmapreduce_spark.streaming import (
     dedup_within_watermark,
     run_available_now,
@@ -25,7 +25,9 @@ from tests.conftest import SF_SMOKE
 
 def _drain(spark, out, mode="append"):
     name = "s" + uuid.uuid4().hex[:12]
-    run_available_now(out, f"/tmp/pmr_ckpt/{name}", output_mode=mode, query_name=name)
+    run_available_now(
+        out, scratch_path(f"pmr_ckpt/{name}"), output_mode=mode, query_name=name
+    )
     return spark.table(name)
 
 
@@ -596,7 +598,7 @@ def test_t14_state_metadata_facts(spark):
     from projectmapreduce_spark.streaming import run_available_now, state_partitions
 
     name = "pmrt14meta_" + uuid.uuid4().hex[:8]
-    ckpt = f"/tmp/pmr_stream_ckpt/{name}"
+    ckpt = scratch_path(f"pmr_stream_ckpt/{name}")
     inputs = [f"{SF_SMOKE}/events.parquet"]
     try:
         agg = (
@@ -634,7 +636,8 @@ def test_t14_state_metadata_facts(spark):
 def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
     """The drain harness sizes a stream's state partitions from its
     input bytes, not from the session's batch shuffle count, and
-    leaves that count as it found it — also when the query fails."""
+    leaves that count and the session's AQE switch as it found them —
+    also when the query fails."""
     import os
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
@@ -642,13 +645,21 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
     from projectmapreduce_spark.session import derive_shuffle_partitions
 
     key = "spark.sql.shuffle.partitions"
+    aqe = "spark.sql.adaptive.enabled"
     events = f"{SF_SMOKE}/events.parquet"
     expect = derive_shuffle_partitions(os.path.getsize(events), min_partitions=2)
     # The session's count follows its cores, which may equal the derived
     # count; give the session a different one so the sizing shows.
-    saved = spark.conf.get(key)
+    saved = {k: spark.conf.get(k) for k in (key, aqe)}
     before = str(expect + 1)
     spark.conf.set(key, before)
+    spark.conf.set(aqe, "true")
+    seen = []
+
+    def record(batch_df, batch_id):
+        batch_df.count()  # a stateful batch commits its state only when run
+        seen.append(spark.conf.get(aqe))
+
     try:
         agg = scan_stream(spark, SF_SMOKE, "events").groupBy("event_type").count()
 
@@ -656,8 +667,18 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
         name = "sized_" + uuid.uuid4().hex[:8]
         run_available_now(agg, ckpt, "complete", name, input_paths=[events])
         assert spark.conf.get(key) == before
+        assert spark.conf.get(aqe) == "true"
         (meta,) = spark.read.format("state-metadata").load(ckpt).collect()
         assert meta.numPartitions == expect != int(before)
+
+        run_available_now(
+            agg,
+            str(tmp_path / "seen"),
+            "complete",
+            input_paths=[events],
+            sink=lambda w: w.foreachBatch(record),
+        )
+        assert seen and set(seen) == {"false"}, seen
 
         def fail(batch_df, batch_id):
             raise RuntimeError("sink failure")
@@ -671,8 +692,10 @@ def test_drain_harness_sizes_state_from_input_bytes(spark, tmp_path):
                 sink=lambda w: w.foreachBatch(fail),
             )
         assert spark.conf.get(key) == before
+        assert spark.conf.get(aqe) == "true"
     finally:
-        spark.conf.set(key, saved)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def _write_events(spark, root, storage):
